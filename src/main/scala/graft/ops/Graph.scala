@@ -4,11 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Iterative graph analytics beyond connected components. The round
-  * discipline is the same as [[Similarity.connectedComponents]]:
-  * per-round RDD-rooting truncates the logical plan (an iterative
-  * self-referencing plan otherwise grows until analysis hangs), and
-  * superseded rounds unpersist so peak storage is 2×|nodes|.
+/** Iterative graph analytics beyond connected components. Every loop
+  * here cuts, caches and hands off its rounds through [[Iterate]].
   */
 object Graph {
 
@@ -19,6 +16,12 @@ object Graph {
     * broadcast cap and sized to executor memory, not to this box.
     */
   private[graft] val BroadcastMaxNodes = 4000000L
+
+  /** Edge-count floor below which [[pageRank]]'s broadcast regime is
+    * not worth its per-round build jobs (≈128 MB exchanged per round;
+    * see pageRankImpl's r14 gate).
+    */
+  private[graft] val BroadcastMinEdges = 8000000L
 
   /** PageRank in FIXED-POINT integer arithmetic — every rank is a
     * BIGINT in `unit`-ths (default 10⁻¹² units), every step is
@@ -95,28 +98,20 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be a proper fraction: $dampingNum/$dampingDen")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    // Catalyst-plan truncation WITHOUT eager evaluation: rounds chain
-    // through RDD roots (so analysis never sees a growing
-    // self-referencing plan) but stay LAZY — the whole iteration
-    // evaluates as ONE job at the final count instead of paying the
-    // scheduler/job floor `iters` times (the floor, not the
+    // Rounds chain through roots (Iterate.rounds): the whole iteration
+    // runs under ONE action, the hand-off count, instead of paying an
+    // action's scheduler/job floor `iters` times (the floor, not the
     // arithmetic, dominated the sf0.1 bench: 4 jobs × 5 rounds ≈
     // whole seconds of fixed overhead). Every intermediate round is
     // consumed exactly once (by the next round), so skipping the
     // per-round cache loses no work; e/deg/nodes are persisted and
     // get cached by their first evaluating stage, then reused by
     // all later rounds of the same job.
-    def root(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-
-    val e = materialize(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")))
-    val deg = materialize(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val nodes = materialize(
+    val deg = Iterate.cached(
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val nodes = Iterate.cached(
       e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
     val base = (unit * (dampingDen - dampingNum)) / dampingDen
 
@@ -130,7 +125,7 @@ object Graph {
     // the restart term are unit·[seed] instead of uniform. The seed
     // set is |seeds| ids joined once onto the |nodes| frame, so the
     // per-round shape is unchanged.
-    val nodesFlagged = materialize(seedsOpt match {
+    val nodesFlagged = Iterate.cached(seedsOpt match {
       case None => nodes.withColumn("__seed", lit(1L))
       case Some(s) =>
         val sd = s.select(col("node").cast("long").as("node"))
@@ -162,12 +157,12 @@ object Graph {
     // at the regime's design point (huge edge frame, ≤4M nodes) the
     // exchange dominates any fixed cost. Gate on the edge count,
     // already computable from the persisted edge frame for one cheap
-    // cached-scan job: below ~8M edges (≈128 MB/round exchanged) the
-    // lazy shuffle chain is measurably the faster plan.
-    val bcastNodes = nNodes <= BroadcastMaxNodes && e.count() >= 8000000L
-    var r = root(nodesFlagged
-      .select(col("node"), (col("__seed") * lit(unit)).as("r")))
-    for (_ <- 1 to iters) {
+    // cached-scan job: below BroadcastMinEdges (≈128 MB/round
+    // exchanged) the lazy shuffle chain is measurably the faster plan.
+    val bcastNodes = nNodes <= BroadcastMaxNodes &&
+      e.count() >= BroadcastMinEdges
+    val r0 = nodesFlagged.select(col("node"), (col("__seed") * lit(unit)).as("r"))
+    val last = Iterate.rounds(r0, iters) { r =>
       // Per-node contribution r div deg is computed on the NODE-sized
       // frame first (one narrow join), so the edge set — the only
       // big frame here — is joined exactly once per round. Joining
@@ -185,17 +180,12 @@ object Graph {
       val damped = s"(coalesce(s, 0L) div ${dampingDen}L) * ${dampingNum}L" +
         s" + ((coalesce(s, 0L) % ${dampingDen}L) * ${dampingNum}L)" +
         s" div ${dampingDen}L"
-      r = root(nodesFlagged.join(
+      nodesFlagged.join(
           if (bcastNodes) broadcast(sums) else sums, Seq("node"), "left")
         .select(col("node"),
-          (col("__seed") * lit(base) + expr(damped)).as("r")))
+          (col("__seed") * lit(base) + expr(damped)).as("r"))
     }
-    val out = r.persist(StorageLevel.MEMORY_AND_DISK)
-    // force the full chain BEFORE dropping the shared inputs — an
-    // early unpersist would recompute e/deg/nodes once per round
-    out.count()
-    e.unpersist(); deg.unpersist(); nodes.unpersist(); nodesFlagged.unpersist()
-    out
+    Iterate.handOff(last, e, deg, nodes, nodesFlagged)
   }
 
   /** Convergence-gated [[pageRank]] (VERDICT r12 #5, completing r11
@@ -217,11 +207,11 @@ object Graph {
     * with the previous rank riding the aggregate as a zero-count
     * tagged row (own=1) in the contribution union — the
     * [[labelPropagationConverged]] idiom — so carrying p1 costs no
-    * extra join. Rounds chain lazily through RDD roots in chunks of
-    * `checkEvery` (one job per chunk); the stability test is one
-    * DECIMAL(38,0) aggregate over the persisted node-sized boundary
-    * frame (the L1 delta is bounded by 2·n·unit, which can exceed
-    * Long range exactly when n·unit is near it).
+    * extra join. Rounds run through [[Iterate.untilStable]] in lazy
+    * chunks of `checkEvery` (one action per chunk); the stability test
+    * is that action: one DECIMAL(38,0) aggregate over the persisted
+    * node-sized boundary frame (the L1 delta is bounded by 2·n·unit,
+    * which can exceed Long range exactly when n·unit is near it).
     *
     * Returns (node, r, rounds_run): r = the fixed-point rank at exit,
     * rounds_run < maxIters PROVES the early exit fired. Persisted;
@@ -238,16 +228,11 @@ object Graph {
     require(epsPerNodeUnits >= 0, s"epsPerNodeUnits: $epsPerNodeUnits")
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be a proper fraction: $dampingNum/$dampingDen")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    def root(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    val e = materialize(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")))
-    val deg = materialize(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val nodes = materialize(
+    val deg = Iterate.cached(
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val nodes = Iterate.cached(
       e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
     val base = (unit * (dampingDen - dampingNum)) / dampingDen
     val nNodes = nodes.count()
@@ -256,66 +241,50 @@ object Graph {
     val epsTotal = BigDecimal(nNodes) * BigDecimal(epsPerNodeUnits)
     // p1 = rank one round back; the init value never reaches a test
     // (the first check happens after >= 1 round, which overwrites it)
-    var l = materialize(nodes.select(col("node"), lit(unit).as("r"),
+    val l0 = Iterate.cached(nodes.select(col("node"), lit(unit).as("r"),
       lit(unit).as("p1")))
-    var done = 0
-    var converged = false
     // broadcast regime below the node threshold (r13) — same
     // rationale and threshold as pageRankImpl: the RDD-rooted rank
     // frame defeats size estimation, so the planner otherwise SMJ'd
-    // and re-exchanged + sorted the EDGE frame every round. r14: the
-    // same edge-count gate as pageRankImpl — each broadcast build is
-    // its own job, so on a small edge frame the per-chunk lazy SMJ
-    // chain beats ~2 build-job floors per round; above ~8M edges the
-    // per-round edge exchange dominates any fixed cost.
+    // and re-exchanged + sorted the EDGE frame every round. The gate
+    // is the node count ALONE: unlike pageRankImpl there is no
+    // BroadcastMinEdges floor, so any graph with at most
+    // BroadcastMaxNodes nodes takes the broadcast regime.
     val bcastNodes = nNodes <= BroadcastMaxNodes
     val damped = s"(s div ${dampingDen}L) * ${dampingNum}L" +
       s" + ((s % ${dampingDen}L) * ${dampingNum}L) div ${dampingDen}L"
-    while (!converged && done < maxIters) {
-      val rounds = math.min(checkEvery, maxIters - done)
-      var cur = root(l)
-      for (_ <- 1 to rounds) {
-        val rd = cur.select(col("node").as("src"), col("r")).join(deg, "src")
-          .select(col("src"), expr("r div deg").as("c"))
-        val rdJ = if (bcastNodes) broadcast(rd) else rd
-        val contrib = e.join(rdJ, "src")
-          .select(col("dst").as("node"), col("c"),
-            lit(0L).as("own"), lit(0L).as("p"))
-        val tagged = contrib.unionAll(cur.select(col("node"),
-            lit(0L).as("c"), lit(1L).as("own"), col("r").as("p")))
-        // every node has its own=1 row, so sum(c) covers in-degree-0
-        // nodes with s = 0 (no left join against the node frame).
-        // No explicit repartition here (r14): pinning the exchange
-        // before the aggregate hoisted the whole agg ABOVE it, so the
-        // full edge-sized contribution stream was shuffled every
-        // round; letting groupBy insert its own exchange restores the
-        // map-side partial aggregate (guide §2.3 "aggregate before
-        // you shuffle") — only node-sized partials cross the wire.
-        cur = root(tagged.groupBy(col("node"))
-          .agg(sum(col("c")).as("s"),
-            max(when(col("own") === 1L, col("p"))).as("pp"))
-          .select(col("node"), (lit(base) + expr(damped)).as("r"),
-            col("pp").as("p1")))
-      }
-      val next = materialize(cur)
-      // ONE action per chunk (r14): the L1-delta aggregate itself
-      // materializes the persisted chunk as it scans (persist caches
-      // on first evaluation), so the separate count() job the r13
-      // shape paid per chunk is redundant.
-      val d = next.agg(sum(abs(col("r") - col("p1"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      l.unpersist()
-      l = next
-      done += rounds
-      converged = Option(d.getDecimal(0))
-        .forall(BigDecimal(_) < epsTotal) // empty graph: trivially stable
+    // the L1-delta aggregate is the chunk's one action: it
+    // materializes the persisted boundary as it scans. A null delta is
+    // the empty graph: trivially stable.
+    val l1Delta = (b: DataFrame) => b.agg(sum(abs(col("r") - col("p1"))
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head().getDecimal(0)
+    val res = Iterate.untilStable(l0, maxIters, checkEvery)(l1Delta)(
+      (_, d) => Option(d).forall(BigDecimal(_) < epsTotal)) { (cur, _) =>
+      val rd = cur.select(col("node").as("src"), col("r")).join(deg, "src")
+        .select(col("src"), expr("r div deg").as("c"))
+      val rdJ = if (bcastNodes) broadcast(rd) else rd
+      val contrib = e.join(rdJ, "src")
+        .select(col("dst").as("node"), col("c"),
+          lit(0L).as("own"), lit(0L).as("p"))
+      val tagged = contrib.unionAll(cur.select(col("node"),
+          lit(0L).as("c"), lit(1L).as("own"), col("r").as("p")))
+      // every node has its own=1 row, so sum(c) covers in-degree-0
+      // nodes with s = 0 (no left join against the node frame).
+      // No explicit repartition here (r14): pinning the exchange
+      // before the aggregate hoisted the whole agg ABOVE it, so the
+      // full edge-sized contribution stream was shuffled every
+      // round; letting groupBy insert its own exchange restores the
+      // map-side partial aggregate (guide §2.3 "aggregate before
+      // you shuffle") — only node-sized partials cross the wire.
+      tagged.groupBy(col("node"))
+        .agg(sum(col("c")).as("s"),
+          max(when(col("own") === 1L, col("p"))).as("pp"))
+        .select(col("node"), (lit(base) + expr(damped)).as("r"),
+          col("pp").as("p1"))
     }
-    val out = materialize(
-      l.select(col("node"), col("r"), lit(done.toLong).as("rounds_run"))
-        .orderBy(col("node")))
-    out.count()
-    l.unpersist(); e.unpersist(); deg.unpersist(); nodes.unpersist()
-    out
+    Iterate.handOff(res.frame.select(col("node"), col("r"),
+        lit(res.rounds.toLong).as("rounds_run")).orderBy(col("node")),
+      res.frame, e, deg, nodes)
   }
 
   /** Exact global triangle count of an undirected simple graph — the
@@ -463,96 +432,61 @@ object Graph {
     * raise it and re-run (the round count is cheap to log).
     *
     * Returns (node, degree) rows of the k-core, degree measured IN
-    * the core. Empty when no k-core exists.
+    * the core. Empty when no k-core exists. Persisted; the caller owns
+    * `.unpersist()`.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIters: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIters >= 1, s"maxIters must be >= 1: $maxIters")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .where(col("a") =!= col("b")).distinct()
-    val e0 = materialize(und.select(col("a").as("u"), col("b").as("v"))
+    val e0 = Iterate.cached(und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b"), col("a"))))
-    val e = peelRounds(spark, e0, k, maxIters)
-    // materialize the result BEFORE dropping the edge frame — the
-    // aggregate is lazy and an early unpersist would recompute the
-    // whole peel chain. Persisted; the caller owns .unpersist().
-    val out = materialize(
+    val e = peelRounds(e0, e0.count(), k, maxIters).frame
+    Iterate.handOff(
       e.groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
-        .orderBy(col("node")))
-    out.count()
-    e.unpersist()
-    out
+        .orderBy(col("node")), e)
   }
 
   /** The k-core peel loop shared by [[kCore]] and
     * [[corenessDecomposition]]: drop all nodes with degree < k from
-    * the DIRECTED-both-ways edge frame `e0` (must be persisted; it is
-    * unpersisted once superseded), recompute, repeat until the edge
+    * the DIRECTED-both-ways edge frame `e0` (persisted, `m0` rows; it
+    * is unpersisted once superseded), recompute, repeat until the edge
     * count is stable or `maxIters` rounds ran. Returns the final
-    * persisted frame — EXACTLY `maxIters` rounds of peeling when
-    * unconverged (each skipped round after convergence is an identity
-    * filter), which is what lets a fixed-round unrolled oracle match
-    * the early-exiting loop bit-for-bit in either regime.
+    * persisted frame and its row count — EXACTLY `maxIters` rounds of
+    * peeling when unconverged (each skipped round after convergence is
+    * an identity filter), which is what lets a fixed-round unrolled
+    * oracle match the early-exiting loop bit-for-bit in either regime.
     *
-    * Rounds run in CHUNKS of `checkEvery`: within a chunk the rounds
-    * chain lazily through RDD roots (plan truncation, no action), and
-    * one count at the chunk boundary materializes them all as a
-    * single job — per-round counts paid the scheduler/job floor
+    * Rounds run in CHUNKS of `checkEvery` ([[Iterate.untilStable]]):
+    * one count at the chunk boundary materializes them all under a
+    * single action — per-round counts paid the scheduler/job floor
     * `maxIters` times, which dominated the sf0.1 wall (VERDICT r8;
     * same diagnosis as pageRank's one-job rewrite). Each round is
     * still persisted (its frame is read twice — degree aggregate +
-    * semi-join — and cache hits WITHIN the chunk job), and the
-    * chunk's superseded intermediates unpersist at the boundary, so
-    * peak storage is checkEvery×|E| of a shrinking frame. Stability
+    * semi-join — and cache hits WITHIN the chunk job), so peak
+    * storage is checkEvery×|E| of a shrinking frame. Stability
     * detection moves to chunk granularity: counts are monotone
     * non-increasing, so an unchanged chunk-boundary count means every
     * round inside was an identity filter — the early exit fires at
     * most checkEvery−1 cheap identity rounds late, on an
-    * already-peeled (smallest) frame.
+    * already-peeled (smallest) frame. A sub-k node always owns ≥1
+    * directed edge row, so edge-count stability IS node stability
+    * (isolated nodes have no rows); an emptied edge set is final.
     */
-  private def peelRounds(spark: org.apache.spark.sql.SparkSession,
-                         e0: DataFrame, k: Int, maxIters: Int,
-                         checkEvery: Int = 4): DataFrame = {
-    def lazyPersist(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    var e = e0
-    var m = e.count()
-    var stable = m == 0
-    var done = 0
-    while (!stable && done < maxIters) {
-      val rounds = math.min(checkEvery, maxIters - done)
-      val chunk = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var cur = e
-      for (_ <- 1 to rounds) {
+  private def peelRounds(e0: DataFrame, m0: Long, k: Int, maxIters: Int,
+                         checkEvery: Int = 4): Iterate.Stable[Long] =
+    Iterate.untilStable(e0, maxIters, checkEvery, cacheRounds = true)(
+        _.count())((m, nm) => nm == 0 || m.contains(nm), start = Some(m0)) {
+      (cur, _) =>
         val keep = cur.groupBy(col("u")).agg(count(lit(1)).as("__d"))
           .where(col("__d") >= k).select(col("u").as("__keep"))
-        val next = lazyPersist(cur
-          .join(keep, cur("u") === col("__keep"), "left_semi")
-          .join(keep, cur("v") === col("__keep"), "left_semi"))
-        chunk += next
-        cur = next
-      }
-      val nm = cur.count() // ONE job materializes the whole chunk
-      e.unpersist()
-      chunk.dropRight(1).foreach(_.unpersist())
-      e = cur
-      done += rounds
-      // a sub-k node always owns ≥1 directed edge row, so edge-count
-      // stability IS node stability (isolated nodes have no rows);
-      // an emptied edge set is final — skip the residual no-op rounds
-      stable = nm == m || nm == 0
-      m = nm
+        cur.join(keep, cur("u") === col("__keep"), "left_semi")
+          .join(keep, cur("v") === col("__keep"), "left_semi")
     }
-    e
-  }
 
   /** Full CORENESS decomposition capped at `kMax`: for every node of
     * the undirected simple graph, the largest k ≤ kMax such that the
@@ -584,38 +518,30 @@ object Graph {
     require(kMax >= 1, s"kMax must be >= 1: $kMax")
     require(maxItersPerLevel >= 1,
       s"maxItersPerLevel must be >= 1: $maxItersPerLevel")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .where(col("a") =!= col("b")).distinct()
-    var e = materialize(und.select(col("a").as("u"), col("b").as("v"))
+    var e = Iterate.cached(und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b"), col("a"))))
-    def membership(frame: DataFrame, k: Int): DataFrame = {
-      val n = materialize(frame.select(col("u").as("node")).distinct()
+    // handed off NOW — the edge frame it reads dies next level
+    def membership(frame: DataFrame, k: Int): DataFrame =
+      Iterate.handOff(frame.select(col("u").as("node")).distinct()
         .withColumn("coreness", lit(k.toLong)))
-      n.count() // root it NOW — the edge frame it reads dies next level
-      n
-    }
     val levels = scala.collection.mutable.ArrayBuffer(membership(e, 1))
     var k = 2
-    var nonEmpty = e.count() > 0
-    while (nonEmpty && k <= kMax) {
-      e = peelRounds(spark, e, k, maxItersPerLevel)
-      nonEmpty = e.count() > 0
-      if (nonEmpty) levels += membership(e, k)
+    var m = e.count() // each level's count comes from its peel's last job
+    while (m > 0 && k <= kMax) {
+      val peeled = peelRounds(e, m, k, maxItersPerLevel)
+      e = peeled.frame
+      m = peeled.value
+      if (m > 0) levels += membership(e, k)
       k += 1
     }
     e.unpersist()
-    val out = materialize(levels.reduce(_ union _)
+    Iterate.handOff(levels.reduce(_ union _)
       .groupBy(col("node")).agg(max(col("coreness")).as("coreness"))
-      .orderBy(col("node")))
-    out.count()
-    levels.foreach(_.unpersist())
-    out
+      .orderBy(col("node")), levels.toSeq: _*)
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -650,9 +576,8 @@ object Graph {
     * (2³¹−1−label) — the hard_negatives_pool trick: no sort, no
     * window, and NOT `mode()` (the r10 A/B measured the
     * TypedImperativeAggregate 2.3× worse — SCALING.md). Rounds chain
-    * through lazy RDD roots (plan truncation without per-round jobs)
-    * exactly like [[pageRank]], so the whole iteration evaluates as
-    * ONE job. Node ids must fit [0, 2³¹) for the packing (checked);
+    * through roots ([[Iterate.rounds]]) exactly like [[pageRank]], so
+    * the whole iteration runs under ONE action. Node ids must fit [0, 2³¹) for the packing (checked);
     * counts are ≤ n < 2³¹ by the same bound.
     *
     * `edges` may be directed/duplicated; normalized to an undirected
@@ -663,12 +588,6 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    def root(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
@@ -686,25 +605,22 @@ object Graph {
     require(maxId < shift,
       s"node ids must be < 2^31 for the packed argmax: max id $maxId")
     // both directions are present, so distinct u covers every node
-    var l = root(e.select(col("u").as("node")).distinct()
-      .withColumn("lab", col("node")))
-    for (_ <- 1 to iters) {
+    val l0 = e.select(col("u").as("node")).distinct()
+      .withColumn("lab", col("node"))
+    val l = Iterate.rounds(l0, iters) { l =>
       val nbr = e.join(l.withColumnRenamed("node", "v"), "v")
         .select(col("u").as("node"), col("lab"))
       val cnt = nbr.groupBy(col("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      l = root(cnt.groupBy(col("node"))
+      cnt.groupBy(col("node"))
         .agg(max(col("c") * lit(shift) + (lit(shift - 1) - col("lab")))
           .as("p"))
         .select(col("node"), (lit(shift - 1) - (col("p") % lit(shift)))
-          .as("lab")))
+          .as("lab"))
     }
-    val out = materialize(
-      l.select(col("node"), col("lab").as("community"))
-        .orderBy(col("node")))
-    out.count()
-    e.unpersist()
-    out
+    Iterate.handOff(
+      l.select(col("node"), col("lab").as("community")).orderBy(col("node")),
+      e)
   }
 
   /** Convergence-gated [[labelPropagation]] (VERDICT r11 #5): stop as
@@ -732,10 +648,10 @@ object Graph {
     * second join against the previous frame — one consumer per round
     * keeps the in-chunk lazy chain linear. Scale shape per round is
     * [[labelPropagation]]'s TWO exchanges (the tagged union adds
-    * |nodes| rows to an edge-sized exchange — noise). Rounds run in
-    * chunks of `checkEvery` chained through lazy RDD roots (one job
-    * per chunk); the stability test is one aggregate over the
-    * persisted node-sized boundary frame.
+    * |nodes| rows to an edge-sized exchange — noise). Rounds run
+    * through [[Iterate.untilStable]] in lazy chunks of `checkEvery`
+    * (one action per chunk); the stability test is that action: one count
+    * of unstable nodes over the persisted node-sized boundary frame.
     *
     * Returns (node, community, osc, rounds_run): community = the
     * label at exit (= at maxIters), osc = 1 iff the node was still
@@ -754,12 +670,6 @@ object Graph {
       s"checkEvery must be even for the period-2 parity: $checkEvery")
     require(maxIters % checkEvery == 0,
       s"maxIters must be a multiple of checkEvery: $maxIters/$checkEvery")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    def root(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
@@ -775,52 +685,39 @@ object Graph {
       s"node ids must be < 2^31 for the packed argmax: max id $maxId")
     // p1/p2 = labels one/two rounds back; init values never reach a
     // stability test (first check is at round 2, where p2 is l0)
-    var l = materialize(e.select(col("u").as("node")).distinct()
+    val l0 = Iterate.cached(e.select(col("u").as("node")).distinct()
       .withColumn("lab", col("node"))
       .withColumn("p1", col("node"))
       .withColumn("p2", col("node")))
-    var done = 0
-    var stable = false
-    while (!stable && done < maxIters) {
-      val rounds = math.min(checkEvery, maxIters - done)
-      var cur = root(l)
-      for (_ <- 1 to rounds) {
-        val nbr = e.join(cur.select(col("node").as("v"), col("lab")), "v")
-          .select(col("u").as("node"), col("lab"),
-            lit(1L).as("c"), lit(0L).as("own"), lit(0L).as("p1t"))
-        val tagged = nbr.unionAll(cur.select(col("node"), col("lab"),
-          lit(0L).as("c"), lit(1L).as("own"), col("p1").as("p1t")))
-        val cnt = tagged.groupBy(col("node"), col("lab"))
-          .agg(sum(col("c")).as("c"), max(col("own")).as("own"),
-            max(col("p1t")).as("p1t"))
-        cur = root(cnt.groupBy(col("node"))
-          .agg(max(when(col("c") > 0L,
-              col("c") * lit(shift) + (lit(shift - 1) - col("lab"))))
-            .as("p"),
-            max(when(col("own") === 1L, col("lab"))).as("old"),
-            max(when(col("own") === 1L, col("p1t"))).as("p1old"))
-          .select(col("node"),
-            (lit(shift - 1) - (col("p") % lit(shift))).as("lab"),
-            col("old").as("p1"), col("p1old").as("p2")))
-      }
-      val next = materialize(cur)
-      next.count() // ONE job materializes the chunk
-      l.unpersist()
-      l = next
-      done += rounds
-      // period <= 2 iff the boundary labels equal two rounds back
-      stable = l.where(col("lab") =!= col("p2")).isEmpty
+    // period <= 2 iff the boundary labels equal two rounds back
+    val unstable = (b: DataFrame) =>
+      b.agg(count(when(col("lab") =!= col("p2"), 1))).head().getLong(0)
+    val res = Iterate.untilStable(l0, maxIters, checkEvery)(unstable)(
+      (_, n) => n == 0) { (cur, _) =>
+      val nbr = e.join(cur.select(col("node").as("v"), col("lab")), "v")
+        .select(col("u").as("node"), col("lab"),
+          lit(1L).as("c"), lit(0L).as("own"), lit(0L).as("p1t"))
+      val tagged = nbr.unionAll(cur.select(col("node"), col("lab"),
+        lit(0L).as("c"), lit(1L).as("own"), col("p1").as("p1t")))
+      val cnt = tagged.groupBy(col("node"), col("lab"))
+        .agg(sum(col("c")).as("c"), max(col("own")).as("own"),
+          max(col("p1t")).as("p1t"))
+      cnt.groupBy(col("node"))
+        .agg(max(when(col("c") > 0L,
+            col("c") * lit(shift) + (lit(shift - 1) - col("lab"))))
+          .as("p"),
+          max(when(col("own") === 1L, col("lab"))).as("old"),
+          max(when(col("own") === 1L, col("p1t"))).as("p1old"))
+        .select(col("node"),
+          (lit(shift - 1) - (col("p") % lit(shift))).as("lab"),
+          col("old").as("p1"), col("p1old").as("p2"))
     }
-    val roundsRun = done.toLong
-    val out = materialize(
+    val l = res.frame
+    Iterate.handOff(
       l.select(col("node"), col("lab").as("community"),
           (col("lab") =!= col("p1")).cast("long").as("osc"),
-          lit(roundsRun).as("rounds_run"))
-        .orderBy(col("node")))
-    out.count()
-    l.unpersist()
-    e.unpersist()
-    out
+          lit(res.rounds.toLong).as("rounds_run"))
+        .orderBy(col("node")), l, e)
   }
 
   /** BFS hop distances from a seed set — fixed-round frontier
@@ -830,13 +727,15 @@ object Graph {
     * Each round is one frontier⋈edges join + one anti-join against
     * the settled set: the frontier SHRINKS as the reachable set
     * saturates, so total work is O(maxHops · m) worst-case and
-    * usually far less; rounds chain lazily through RDD roots (the
-    * pageRank plan-truncation idiom) with the settled set persisted
-    * per round because two consumers (anti-join + union) read it.
-    * Fixed `maxHops` — no early-exit count per round — keeps the
-    * whole expansion ONE job and makes the unrolled SQL oracle
-    * replay the loop exactly; beyond-horizon nodes are simply absent
-    * from the result (callers report them as unreachable-at-k).
+    * usually far less; the settled set is persisted per round
+    * ([[Iterate.untilStable]] with cached rounds) because two
+    * consumers (anti-join + union) read it, and the frontier is a lazy
+    * root of it. Fixed `maxHops` — no early-exit count per round, one
+    * chunk that never tests stability — keeps the whole expansion ONE
+    * action and makes the unrolled SQL oracle replay the loop exactly;
+    * beyond-horizon nodes are simply absent from the result (callers
+    * report them as unreachable-at-k). Persisted; the caller owns
+    * `.unpersist()`.
     *
     * Output: (node, d) — hop distance 0..maxHops for every node
     * reached, each node exactly once at its FIRST discovery hop.
@@ -845,13 +744,7 @@ object Graph {
               seeds: DataFrame, maxHops: Int,
               broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val spark = edges.sparkSession
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    def root(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    val e = materialize(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")))
     // Broadcast regime below the node threshold (r13, the pageRankImpl
     // pattern): the frontier and settled frames are node-bounded but
@@ -866,12 +759,13 @@ object Graph {
       .union(seeds.select(col("node").cast("long")))
       .distinct().count()
     val bcastNodes = nNodes <= broadcastMaxNodes
-    val settled = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var dist = materialize(seeds.select(col("node").cast("long").as("node"))
+    val dist0 = Iterate.cached(seeds.select(col("node").cast("long").as("node"))
       .distinct().withColumn("d", lit(0L)))
-    settled += dist
-    var frontier = root(dist.select(col("node")))
-    for (h <- 1 to maxHops) {
+    val res = Iterate.untilStable(dist0, maxHops, maxHops, cacheRounds = true)(
+        _.count())(Iterate.never) { (dist, round) =>
+      val h = round.index
+      val frontier = Iterate.root(
+        dist.where(col("d") === (h - 1).toLong).select(col("node")))
       val frontJ = if (bcastNodes)
         broadcast(frontier.withColumnRenamed("node", "src"))
       else frontier.withColumnRenamed("node", "src")
@@ -881,14 +775,9 @@ object Graph {
         else dist.select(col("node"))
       val fresh = nbrs.join(distJ, Seq("node"), "left_anti")
         .withColumn("d", lit(h.toLong))
-      dist = materialize(dist.unionByName(fresh))
-      settled += dist
-      frontier = root(dist.where(col("d") === h.toLong).select(col("node")))
+      dist.unionByName(fresh)
     }
-    val out = dist // final round's materialize already persisted it
-    out.count() // force the chain before dropping shared inputs
     e.unpersist()
-    settled.dropRight(1).foreach(_.unpersist())
-    out
+    res.frame
   }
 }

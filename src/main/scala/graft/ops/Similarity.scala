@@ -142,12 +142,21 @@ object Similarity {
     exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band value: fold `rows` consecutive signature components with
-    * a base-31 polynomial (values < 2^31 · 31^(rows-1), no overflow
-    * for rows ≤ 4).
+  /** Most signature components one LSH band may fold into a Long.
+    * Components are < 2^31 − 1, so a base-31 fold of r of them is
+    * < 2^31 · (31^r − 1)/30: about 2^61 at r = 7, past 2^63 at r = 8.
     */
-  def bandValue(sigCols: Seq[Column]): Column =
+  val MaxBandRows = 7
+
+  /** LSH band value: fold `rows` consecutive signature components with
+    * a base-31 polynomial — exact in a Long for rows ≤ [[MaxBandRows]],
+    * checked here (at plan construction, before any job runs).
+    */
+  def bandValue(sigCols: Seq[Column]): Column = {
+    require(sigCols.size <= MaxBandRows,
+      s"LSH band of ${sigCols.size} rows overflows a Long; max $MaxBandRows")
     sigCols.reduce((a, b) => a * lit(31L) + b)
+  }
 
   /** Exploded (id, band, bv) bucket assignments of a signature frame.
     * One row per (doc, band); docs are unique within a bucket.
@@ -945,17 +954,17 @@ object Similarity {
     *
     * Cost per round: three hash-partition exchanges (neighbor join,
     * min-groupBy, jump join — all keyed on node/label). Each round's
-    * frames are re-rooted on their materialized RDD
-    * (createDataFrame(plan.rdd) + persist): the self-join references
-    * the label plan twice per round, so without lineage truncation
-    * the LOGICAL plan grows exponentially and analysis itself hangs
-    * long before any data moves (persist alone materializes data but
-    * keeps the full plan). RDD-rooting — unlike localCheckpoint —
-    * leaves each round a normal cached Dataset, so superseded rounds
-    * unpersist deterministically and peak storage stays 2×|nodes|
-    * (mins + next in flight) rather than accumulating until driver
-    * GC. mins is materialized once per round — both the jump join's
-    * sides read its cache, not a recomputed aggregation.
+    * frames are cached roots ([[Iterate.untilStable]], one round per
+    * chunk): the self-join references the label plan twice per round,
+    * so without lineage truncation the LOGICAL plan grows
+    * exponentially and analysis itself hangs long before any data
+    * moves (persist alone materializes data but keeps the full plan).
+    * A root — unlike localCheckpoint — leaves each round a normal
+    * cached Dataset, so superseded rounds unpersist deterministically
+    * and peak storage stays 2×|nodes| (mins + next in flight) rather
+    * than accumulating until a later GC. mins is cached once per round
+    * — both the jump join's sides read its cache, not a recomputed
+    * aggregation — and the label-sum test is the round's one action.
     *
     * Returns (doc_id, cluster) for every node appearing in `edges`,
     * cluster = the minimum doc id of the component. The returned
@@ -970,56 +979,44 @@ object Similarity {
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    // truncate a plan at its materialized RDD: downstream plans see a
-    // flat scan, superseded rounds free their blocks via unpersist
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     val und = edges.select(col("id_a").as("node"), col("id_b").as("nbr"))
       .union(edges.select(col("id_b").as("node"), col("id_a").as("nbr")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = materialize(und.groupBy(col("node"))
-      .agg(least(min(col("nbr")), col("node")).as("lbl")))
+    // labels carry the output names (doc_id, cluster) from round 0, so
+    // the last boundary — cached and materialized by its label-sum
+    // action — IS the caller-owned result
+    val labels0 = Iterate.cached(und.groupBy(col("node"))
+      .agg(least(min(col("nbr")), col("node")).as("cluster"))
+      .withColumnRenamed("node", "doc_id"))
+    val labelSum = (b: DataFrame) =>
+      b.agg(sum(col("cluster").cast("decimal(38,0)"))).head.getDecimal(0)
     // sum() over zero rows is null: an empty edge frame is already
-    // converged (empty result), not an NPE
-    var lblSum = labels.agg(sum(col("lbl").cast("decimal(38,0)")))
-      .head.getDecimal(0)
-    var it = 0
-    var converged = lblSum == null
-    while (!converged && it < maxIter) {
-      val prop = und.as("u").join(labels.as("l"), col("u.nbr") === col("l.node"))
-        .select(col("u.node").as("node"), col("l.lbl").as("lbl"))
-      val mins = materialize(labels.select(col("node"), col("lbl")).union(prop)
-        .groupBy(col("node")).agg(min(col("lbl")).as("lbl")))
+    // converged (empty result), not an NPE. Labels only ever fall, so
+    // an unchanged sum is the fixpoint.
+    val res = Iterate.untilStable(labels0, maxIter, 1, cacheRounds = true)(
+        labelSum)((prev, s) => s == null || prev.exists(_.compareTo(s) == 0),
+        start = Some(labelSum(labels0))) { (labels, round) =>
+      val prop = und.as("u")
+        .join(labels.as("l"), col("u.nbr") === col("l.doc_id"))
+        .select(col("u.node").as("doc_id"), col("l.cluster").as("cluster"))
+      val mins = round.cache(labels.union(prop)
+        .groupBy(col("doc_id")).agg(min(col("cluster")).as("cluster")))
       // pointer jump: lbl(lbl(n)) ≤ lbl(n) because every label is a
       // node id and lbl(m) ≤ m — inner join is total over the domain.
       // The right side is a renamed projection (fresh attribute ids)
       // so the self-join needs no alias-qualified resolution.
-      val jumpTo = mins.select(col("node").as("__jn"), col("lbl").as("__jl"))
-      val next = materialize(mins.join(jumpTo, col("lbl") === col("__jn"))
-        .select(col("node"), col("__jl").as("lbl")))
-      val nextSum = next.agg(sum(col("lbl").cast("decimal(38,0)")))
-        .head.getDecimal(0)
-      mins.unpersist()
-      labels.unpersist()
-      labels = next
-      converged = nextSum.compareTo(lblSum) == 0
-      lblSum = nextSum
-      it += 1
+      val jumpTo = mins.select(col("doc_id").as("__jn"), col("cluster").as("__jl"))
+      mins.join(jumpTo, col("cluster") === col("__jn"))
+        .select(col("doc_id"), col("__jl").as("cluster"))
     }
     und.unpersist()
-    if (!converged) {
-      labels.unpersist()
+    if (!res.stable) {
+      res.frame.unpersist()
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "a component's diameter exceeds maxIter; raise it")
     }
-    val out = labels.select(col("node").as("doc_id"), col("lbl").as("cluster"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize so the caller-owned handle is the only cache
-    labels.unpersist()
-    out
+    res.frame
   }
 
   /** IVF (nprobe=1) approximate-nearest-neighbor top-k against an
@@ -1200,29 +1197,24 @@ object Similarity {
   def kmeansFit(emb: DataFrame, idCol: String, embCol: String,
                 k: Int, iters: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = emb.sparkSession
-    // per-round lineage truncation, as in connectedComponents: cents
-    // is referenced twice per round (assignment + empty-cell join),
-    // so an unmaterialized plan doubles every iteration and analysis
-    // hangs long before the spec's iters=5 would show it
-    def materialize(df: DataFrame): DataFrame = {
-      val m = spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      m
-    }
     val e = emb
       .select(col(idCol).as("__id"), col(embCol).cast("array<double>").as("__emb"))
       .where(size(col("__emb")) > 0)
       .withColumn("__nrm", vectorNorm(col("__emb")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val w = Window.orderBy(col("__h"), col("__id"))
-    var cents = materialize(
+    val cents0 = Iterate.cached(
       e.withColumn("__h", detHash(DetHashPrime, col("__id")))
         .orderBy(col("__h"), col("__id")).limit(k)
         .select((row_number().over(w) - 1).cast("long").as("cid"),
           col("__emb").as("cemb")))
-    for (_ <- 1 to iters) {
+    // per-round lineage truncation, as in connectedComponents: cents
+    // is referenced twice per round (assignment + empty-cell join),
+    // so an unmaterialized plan doubles every iteration and analysis
+    // hangs long before the spec's iters=5 would show it. Every round
+    // is materialized by its own count (one round per chunk).
+    val res = Iterate.untilStable(cents0, iters, 1, cacheRounds = true)(
+        _.count())(Iterate.never, start = Some(cents0.count())) { (cents, _) =>
       val assigned = assignCells(e, cents, "__id")
       val means = assigned
         .select(col("cell"), posexplode(col("__emb")).as(Seq("pos", "x")))
@@ -1232,15 +1224,12 @@ object Similarity {
         .select(col("cell").as("cid"),
           transform(col("pm"), p => p.getField("m")).as("cemb"))
       // empty cells keep their previous centroid
-      val next = materialize(
-        cents.as("old").join(means.as("new"), Seq("cid"), "left")
-          .select(col("cid"),
-            coalesce(col("new.cemb"), col("old.cemb")).as("cemb")))
-      cents.unpersist()
-      cents = next
+      cents.as("old").join(means.as("new"), Seq("cid"), "left")
+        .select(col("cid"),
+          coalesce(col("new.cemb"), col("old.cemb")).as("cemb"))
     }
     e.unpersist()
-    cents
+    res.frame
   }
 
   /** Product quantization — the billion-scale ANN compression: split

@@ -188,12 +188,18 @@ object MinHashLocal {
     }
   }
 
-  /** (band, bandValue) keys — Similarity.bandValue's base-31 fold. */
-  def buckets(sig: Array[Long], bands: Int, rows: Int): Seq[(Int, Long)] =
+  /** (band, bandValue) keys — Similarity.bandValue's base-31 fold,
+    * under the same Long-range bound (the JVM loop would wrap silently).
+    */
+  def buckets(sig: Array[Long], bands: Int, rows: Int): Seq[(Int, Long)] = {
+    require(rows <= graft.ops.Similarity.MaxBandRows,
+      s"LSH band of $rows rows overflows a Long; " +
+        s"max ${graft.ops.Similarity.MaxBandRows}")
     (0 until bands).map { j =>
       var bv = 0L
       var r = 0
       while (r < rows) { bv = bv * 31L + sig(j * rows + r); r += 1 }
       (j, bv)
     }
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Graph
 
-class GraphSpec extends SparkSpec {
+class GraphSpec extends SparkSpec with IterationContract {
   import spark.implicits._
 
   private val Unit1 = 1000000000000L
@@ -374,5 +374,43 @@ class GraphSpec extends SparkSpec {
     val expected = Map(1L -> 0L, 20L -> 0L, 21L -> 0L, 22L -> 0L,
       23L -> 0L, 2L -> 1L, 3L -> 2L)
     assert(byRegime.forall(_ == expected), s"$byRegime")
+  }
+
+  // Iteration-helper contract on one small fixed graph: two triangles
+  // bridged by 3-4 plus a tail 6-7-8. Each ceiling is the most jobs the
+  // operator started in 15 runs before the loops moved onto
+  // ops.Iterate (kCore ranged 66-70 there, corenessDecomposition
+  // 96-102). The two converged/coreness ceilings sit strictly below
+  // every such run: their separate stability probes are gone.
+  private def contractEdges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+    (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L), (7L, 8L)).toDF("src", "dst")
+  private def contractBoth =
+    contractEdges.union(contractEdges.select(col("dst"), col("src")))
+  private def contractSeeds = Seq(1L).toDF("node")
+
+  Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+    ("pageRank", 29, () =>
+      Graph.pageRank(contractBoth, "src", "dst", iters = 3)),
+    ("personalizedPageRank", 30, () =>
+      Graph.personalizedPageRank(contractBoth, "src", "dst", contractSeeds,
+        iters = 3)),
+    ("pageRankConverged", 22, () =>
+      Graph.pageRankConverged(contractBoth, "src", "dst", maxIters = 6,
+        epsPerNodeUnits = Unit1 / 10, checkEvery = 2)),
+    ("kCore", 70, () => Graph.kCore(contractEdges, "src", "dst", k = 2)),
+    ("corenessDecomposition", 95, () =>
+      Graph.corenessDecomposition(contractEdges, "src", "dst", kMax = 3)),
+    ("labelPropagation", 23, () =>
+      Graph.labelPropagation(contractEdges, "src", "dst", iters = 4)),
+    ("labelPropagationConverged", 50, () =>
+      Graph.labelPropagationConverged(contractEdges, "src", "dst",
+        maxIters = 8, checkEvery = 2)),
+    ("bfsHops", 22, () =>
+      Graph.bfsHops(contractBoth, "src", "dst", contractSeeds, maxHops = 3))
+  ).foreach { case (name, maxJobs, op) =>
+    test(s"iteration contract: $name caches only its result and stays " +
+      "under its job ceiling") {
+      info(s"jobs = ${iterationContract(maxJobs)(op())}")
+    }
   }
 }

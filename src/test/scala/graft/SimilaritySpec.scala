@@ -7,7 +7,7 @@ import graft.ops.Similarity
   * 88-100: a known near-duplicate sentence pair must collide) plus
   * dedup invariants.
   */
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with IterationContract {
   import spark.implicits._
 
   private val near1 = "the quick brown fox jumps over the lazy dog in the garden today"
@@ -42,6 +42,23 @@ class SimilaritySpec extends SparkSpec {
     assert(ids == Set(0L, 2L))
     val twice = Similarity.minhashDedup(once, "doc_id", "text")
     assert(twice.select("doc_id").as[Long].collect().toSet == ids)
+  }
+
+  test("LSH bands: 8 rows overflow a Long and fail before any job runs; " +
+    "7 rows run") {
+    val (err, jobs) = jobsStarted(intercept[IllegalArgumentException](
+      Similarity.minhashDedup(docs, "doc_id", "text", 128, 5, 16, 8)))
+    assert(jobs == 0, s"$jobs jobs ran before the band check")
+    assert(err.getMessage.contains("overflows a Long"), err.getMessage)
+    intercept[IllegalArgumentException](
+      graft.streaming.MinHashLocal.buckets(Array.fill(128)(0L), 16, 8))
+    // 7 rows is the largest fold that stays exact: it runs, and the
+    // far doc and the lower id of the near pair always survive
+    val kept = Similarity.minhashDedup(docs, "doc_id", "text", 112, 5, 16, 7)
+      .select("doc_id").as[Long].collect().toSet
+    assert(Set(0L, 2L).subsetOf(kept), s"$kept")
+    assert(graft.streaming.MinHashLocal.buckets(
+      Array.fill(112)(Int.MaxValue.toLong - 1), 16, 7).forall(_._2 > 0))
   }
 
   test("jaccardPairs computes the exact jaccard for a known pair") {
@@ -641,5 +658,27 @@ class SimilaritySpec extends SparkSpec {
     rows.foreach { case (_, nTrue, nHit, recall) =>
       assert(nHit <= nTrue && recall >= 0.0 && recall <= 1.0)
     }
+  }
+
+  // Iteration-helper contract (see GraphSpec): each ceiling is the job
+  // count the operator started before its loop moved onto ops.Iterate.
+  // connectedComponents' 23 then did not include materializing the
+  // returned frame: freeing the last label frame dropped its cache.
+  test("iteration contract: connectedComponents caches only its result " +
+    "and stays under its job ceiling") {
+    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (20L, 21L))
+      .toDF("id_a", "id_b")
+    info(s"jobs = ${iterationContract(23)(
+      Similarity.connectedComponents(edges))}")
+  }
+
+  test("iteration contract: kmeansFit caches only its result and stays " +
+    "under its job ceiling") {
+    val rows = for (axis <- 0 until 3; i <- 0 until 6)
+      yield (axis * 100L + i, Array.tabulate(4)(d =>
+        (if (d == axis) 10.0 else 0.0) + 0.1 * math.sin(i * 7 + d)))
+    val e = rows.toDF("vec_id", "embedding")
+    info(s"jobs = ${iterationContract(28)(
+      Similarity.kmeansFit(e, "vec_id", "embedding", k = 3, iters = 3))}")
   }
 }
