@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession.jsonString
 
 /** Benchmark driver: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query medians.
@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * #8); the >8 s class gets 2× the extra passes with a park between
   * them so the samples span throttle windows (VERDICT r9 #5).
   * SPARK_GRAFT_BENCH_ONLY=a,b,c restricts to a subset for local
-  * iteration.
+  * iteration. A query that throws gets no timing: the records list it
+  * under "failed" and the run exits 1 after writing them.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -28,18 +29,7 @@ object Bench {
     // (Verify/oracle runs never set this — they stay on md5)
     sys.env.get("SPARK_GRAFT_HASH_MODE").foreach(m =>
       spark.conf.set(graft.functions.GraftFunctions.HashModeKey, m))
-    // JVM warm-up: a tiny query touching higher-order functions and a
-    // shuffle, so the first timed query doesn't absorb the one-time
-    // Janino/lambda codegen cost (~5-15 s, measured) that every
-    // executor JVM pays exactly once.
-    locally {
-      import org.apache.spark.sql.functions._
-      spark.range(1000)
-        .select(aggregate(transform(sequence(lit(0), lit(3)), i => i * 2),
-          lit(0L), (a, b) => a + b).as("v"))
-        .groupBy(col("v")).count()
-        .write.format("noop").mode("overwrite").save()
-    }
+    LocalSession.warmUp(spark)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -66,7 +56,9 @@ object Bench {
     // isolated). So: gc, run an UNTIMED settle action that spins
     // the scheduler while the cleaner queue drains, gc the newly
     // unreachable state, and park briefly for concurrent-GC tails.
-    def settleThenTime(name: String): (String, Double) = {
+    // A query that throws gets no timing: it is named in `failed`.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def settleThenTime(name: String): Option[(String, Double)] = {
       spark.catalog.clearCache()
       System.gc()
       spark.range(1024).repartition(4)
@@ -77,9 +69,14 @@ object Bench {
       val t0 = System.nanoTime()
       // noop sink forces full evaluation of every output column;
       // count() would let Catalyst prune the projections being timed.
-      try queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-      name -> (System.nanoTime() - t0) / 1e9
+      try {
+        queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name: $e")
+        failed += name
+        None
+      }
     }
     // Spark-side mini-basket (VERDICT r11 #4): the DuckDB oracle
     // basket divides out HOST state, but r10→r11 showed the residual
@@ -97,16 +94,16 @@ object Bench {
       "text_token_stats", "cost_report", "events_sessionize")
       .filter(queries.contains)
     def sparkBasket(): Seq[(String, Double)] =
-      sparkBasketNames.map { n =>
-        val ts = (1 to 2).map(_ => settleThenTime(n)._2)
-        n -> ts.min
+      sparkBasketNames.flatMap { n =>
+        (1 to 2).flatMap(_ => settleThenTime(n)).map(_._2).minOption.map(n -> _)
       }
     val basketStart = if (only.isEmpty) sparkBasket() else Nil
     val perRound = (1 to runs).map { round =>
       val order = new scala.util.Random(round * 1009L).shuffle(names)
-      order.map(settleThenTime).toMap
+      order.flatMap(settleThenTime).toMap
     }
-    val prelim = names.map(n => n -> median(perRound.map(_(n)))).toMap
+    val prelim = names.filterNot(failed)
+      .map(n => n -> median(perRound.map(_(n)))).toMap
     // Heavy-tail determinism (VERDICT r8 #8): queries that saturate
     // all 32 threads for seconds show 1.5-2.3× same-day swings that a
     // 3-run median can't always filter — the largest noise source in
@@ -133,10 +130,10 @@ object Bench {
         else {
           if (round > 1) Thread.sleep(3000) // decorrelate burst windows
           new scala.util.Random(900001L + round).shuffle(pool)
-            .map(settleThenTime)
+            .flatMap(settleThenTime)
         }
       }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
-    val results = names.map { n =>
+    val results = names.filterNot(failed).map { n =>
       n -> median(perRound.map(_(n)) ++ extraRuns.getOrElse(n, Nil))
     }.toMap
     // same-JVM end anchor, after every timed pass (see basketStart)
@@ -144,8 +141,8 @@ object Bench {
     // completeness tripwire: BENCH_LOCAL.json is the only full archive
     // (stdout keeps top-N); an accidentally-unregistered query must
     // fail the bench, not hide in the omitted tail
-    require(only.nonEmpty || results.keySet == SparkEntry.queries.keySet,
-      s"bench ran ${results.size} of ${SparkEntry.queries.size} declared queries")
+    require(only.nonEmpty || results.keySet ++ failed == SparkEntry.queries.keySet,
+      s"bench ran ${results.size + failed.size} of ${SparkEntry.queries.size} declared queries")
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // Same-session DuckDB oracle anchor (VERDICT r10 #4): the r9→r10
@@ -164,15 +161,6 @@ object Bench {
       "text_token_stats", "judge_metrics", "events_sessionize",
       "cost_report", "stats_winsorized", "group_quantiles_exact",
       "dedup_minhash_lsh", "graph_pagerank_parts")
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val basketWanted = sys.env.get("SPARK_GRAFT_BENCH_ORACLE") match {
       case Some("0") => false
       case Some("1") => true // force in a subset run (dev testing)
@@ -185,7 +173,7 @@ object Bench {
         val dir = java.nio.file.Files.createTempDirectory("bench_oracle_")
         val sqlFile = dir.resolve("basket.json")
         java.nio.file.Files.writeString(sqlFile, sqls.map { case (n, q) =>
-          s""""${jesc(n)}":"${jesc(q)}"""" }.mkString("{", ",", "}"))
+          s"${jsonString(n)}:${jsonString(q)}" }.mkString("{", ",", "}"))
         val py = dir.resolve("basket.py")
         java.nio.file.Files.writeString(py,
           """import duckdb, glob, json, os, sys, time
@@ -241,11 +229,12 @@ object Bench {
         val norm = if (mean > 0) results.values.sum / mean else 0.0
         s""","spark_basket_start_s":${fmt(s0)},"spark_basket_end_s":${fmt(s1)},"spark_basket_drift":${fmt(drift)},"suite_over_spark_basket":${fmt(norm)}"""
       }
+    val failedExtra = failed.map(jsonString).mkString(""","failed":[""", ",", "]")
     def jsonLine(entries: Seq[(String, Double)], extra: String): String = {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.values.sum else 0.0
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs$extra$basketExtra$sparkBasketExtra}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs$extra$basketExtra$sparkBasketExtra$failedExtra}"""
     }
     val all = results.toSeq
     val full = jsonLine(all, "")
@@ -292,12 +281,12 @@ object Bench {
             .filterNot { case (k, _) => k == "runs" || k == "omitted" }
             .toSeq
         } catch { case _: Throwable => Seq.empty[(String, Double)] }
-        val merged = (prior.filterNot(p => results.contains(p._1)) ++ all)
+        val merged = (prior.filterNot(p => results.contains(p._1) || failed(p._1)) ++ all)
           .sortBy(_._1)
         val qs = merged.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
           .mkString("{", ",", "}")
         val tot = merged.map(_._2).sum
-        s"""{"metric":"total","value":${fmt(tot)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"merged":true}"""
+        s"""{"metric":"total","value":${fmt(tot)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"merged":true$failedExtra}"""
       }
     for ((out, txt) <- Seq(
         Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json") -> full),
@@ -316,5 +305,6 @@ object Bench {
       .getOrElse(Seq.empty)
     println(jsonLine(keep, s""","omitted":${all.size - keep.size},"detail":"BENCH_LOCAL.json""""))
     spark.stop()
+    LocalSession.exitIfFailed("bench", failed)
   }
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.LocalSession.jsonString
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for tools/check.py's DuckDB compare. Exits 1, naming
   * the failed queries, when any query threw. */
@@ -25,27 +25,12 @@ object Verify {
         Some(name)
       } finally spark.catalog.clearCache() // operators may persist frames
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(
-        s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
-      sys.exit(1)
-    }
+    LocalSession.exitIfFailed("verify", failed)
   }
 }

@@ -319,10 +319,10 @@ object Graph {
     *   - Broadcastable (≤ `broadcastMaxEdges` oriented edges): the
     *     EDGE-ITERATOR form — group the oriented edges into per-node
     *     sorted out-adjacency arrays (O(√m) long by orientation, so
-    *     the array frame is ~the edge set's size), broadcast that
-    *     frame onto the edge scan twice, and sum
-    *     |N⁺(s) ∩ N⁺(t)| per edge. Each triangle is counted exactly
-    *     once, at its lowest-oriented base edge. The O(m^1.5) wedge
+    *     the array frame is ~the edge set's size), explode it back
+    *     into edges that carry N⁺(s), broadcast it once to look up
+    *     N⁺(t), and sum |N⁺(s) ∩ N⁺(t)| per edge. Each triangle is
+    *     counted exactly once, at its lowest-oriented base edge. The O(m^1.5) wedge
     *     stream (tens of millions of rows at sf0.1) NEVER
     *     materializes — measured 2× faster than even a fully
     *     broadcast wedge+semi-join pipeline.
@@ -348,8 +348,8 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).cast("long").as("__v"))
       .where(col("__u") =!= col("__v"))
     // normalization-dedup strategy is SHAPE-DEPENDENT (both sides
-    // measured, GraphProbe ×300 + sf0.1 A/B — see SCALING.md
-    // round-11 "near-unique keys, second site"): when pair keys
+    // measured, ×300 stage timing + sf0.1 A/B — SCALING.md round-11
+    // "Near-unique keys, second site"): when pair keys
     // repeat (sf0.1 co-purchase stream, ~5× duplication) the default
     // map-side partial aggregate shrinks the exchange and wins
     // (4.9 vs 6.3 s); when keys are near-unique at spill scale the
@@ -375,26 +375,23 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = oriented.count()
     val n = if (nEdges <= broadcastMaxEdges) {
-      // ONE broadcast for both adjacency sides (r14): r13 persisted
-      // adj eagerly because the two BroadcastExchanges — whose
-      // children differed only by a rename Project — were built as
-      // independent jobs and exchange reuse did not fire across the
-      // different projections (2 × ~40 CPU-s duplicate aggregation
-      // stages, guide §7.2). Expressing both joins against ALIASES of
-      // the same frame (no rename Project) makes the two exchanges
-      // canonically identical, so ReuseExchange builds the relation
-      // ONCE and ships it once; the lazy persist is insurance if a
-      // planner change ever splits them again (no eager count() job —
-      // the r13 eager materialization paid an extra pass per query,
-      // flagged by the r13 driver regression, 0.85×).
+      // ONE adjacency build and ONE broadcast: the probe side is the
+      // adjacency frame itself — exploding N⁺(s) yields every oriented
+      // edge (s, t) with N⁺(s) already attached — so only N⁺(t) is
+      // looked up. Joining the edge scan against two aliases of one
+      // broadcast frame built the relation twice: adaptive execution
+      // wraps each scan of a cached frame in its own query stage, and
+      // stage ids make the two exchanges canonically different, so
+      // exchange reuse never fired. The lazy persist shares the
+      // aggregate between the two sides.
       val adj = oriented.groupBy(col("s").as("__n"))
         .agg(sort_array(collect_list(col("t"))).as("__nbr"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val tri = oriented.as("e")
-        .join(broadcast(adj.as("a1")), col("e.s") === col("a1.__n"), "left")
-        .join(broadcast(adj.as("a2")), col("e.t") === col("a2.__n"), "left")
+      val tri = adj
+        .select(col("__nbr").as("__ns"), explode(col("__nbr")).as("__t"))
+        .join(broadcast(adj), col("__t") === col("__n"), "left")
         .select(coalesce(
-            size(array_intersect(col("a1.__nbr"), col("a2.__nbr"))), lit(0))
+            size(array_intersect(col("__ns"), col("__nbr"))), lit(0))
           .cast("long").as("__tri"))
         .agg(sum(col("__tri")).as("n_triangles")).head().getLong(0)
       adj.unpersist()

@@ -459,8 +459,8 @@ object Similarity {
     // (r13's pin: at sf0.1 the postings carry 17 distinct tokens, so
     // 32 hash partitions were mostly empty while 32 concurrent
     // verify tasks burned 264 CPU-s on work that 8 tasks do in 16 —
-    // measured by ProfileQuery r14, the driver's c8/c32 = 0.45
-    // inversion). The probe count is one tiny aggregate over the
+    // measured r14, the driver's c8/c32 = 0.45 inversion; SCALING.md
+    // "The 32-core > 8-core suite inversion"). The probe count is one tiny aggregate over the
     // eagerly-checkpointed postings; ~6M probes ≈ 1–2 CPU-s of
     // codegen'd join work per task. At corpus scale the division
     // saturates at the session cap and the r13 plan shape stands.

@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * r14 that over-provisions just as badly on small inputs — 32
   * near-empty tasks of a KB-scale frame cost more in per-task
   * scheduling + concurrent-allocation pressure than the work they
-  * spread (ProfileQuery: the PPJoin verify stage burned 264 CPU-s at
-  * 32 tasks vs 16 CPU-s at 8 tasks for identical input). Partitions
+  * spread (the PPJoin verify stage burned 264 CPU-s at 32 tasks vs
+  * 16 CPU-s at 8 tasks for identical input — SCALING.md "The 32-core >
+  * 8-core suite inversion"). Partitions
   * must be derived from the stage's own unit of work, capped by the
   * session knob a cluster operator sizes to the data.
   */
@@ -27,9 +28,14 @@ object Tuning {
     * right for a single-JVM session — and for any cluster whose jobs
     * are cheap to re-run — but a production deployment at scale sets
     * this to true (plus a checkpoint dir) and pays one durable write
-    * per staged frame for a recovery story. All staged frames are
-    * result-sized or distinct-value-sized, so the write is bounded by
-    * the query's own output, not the corpus.
+    * per staged frame for a recovery story. Most staged frames are
+    * result-sized or distinct-value-sized, but some are corpus-sized:
+    * for example dedup_survival_curve stages the whole augmented
+    * documents corpus, and semDedup, semDedupCentroidRank and
+    * semDedupIncremental stage one `assignCells` row per input
+    * embedding. So the durable write per query is bounded by its
+    * largest staged input — up to a whole corpus table — not by its
+    * output.
     */
   private val ReliableCheckpointKey = "spark.graft.reliableCheckpoint"
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.DoubleType
+import graft.ops.Tuning.StagedFrame
 
 /** LLM-as-a-judge operator (reference FactsMetrics,
   * apps/llm_as_a_judge/eval_with_facts.py:400-546): per row, fill a
@@ -112,13 +113,17 @@ object Judge {
     * reach by luck. One row out: n, po, pe, kappa.
     *
     * Scale shape: ONE shuffle builds the (a, b) contingency table —
-    * at most k² cells for k categories — which is persisted (cells,
-    * not rows) and re-aggregated three ways (totals, row marginals,
-    * column marginals); the corpus is scanned exactly once however
-    * many categories exist. The marginal product sums as
-    * DECIMAL(38,0) (n² overflows BIGINT past ~3·10⁹ rows); the final
-    * ratios are single IEEE divisions of exact integers in a fixed
-    * expression shape, so any engine reproduces them bit-for-bit.
+    * at most k² cells for k categories — which is re-aggregated three
+    * ways (totals, row marginals, column marginals). The table is
+    * staged with a lazy `stageCheckpoint`, not a persist the caller
+    * could never free: the three consumers' exchanges are not reused
+    * (the join legs push an inferred not-null filter below the
+    * aggregate), so without it each re-ran the judge calls. The corpus
+    * is scanned exactly once however many categories exist. The
+    * marginal product sums as DECIMAL(38,0) (n² overflows BIGINT past
+    * ~3·10⁹ rows); the final ratios are single IEEE divisions of exact
+    * integers in a fixed expression shape, so any engine reproduces
+    * them bit-for-bit.
     * κ is NULL when p_e = 1 (both raters constant — agreement is
     * vacuous and the statistic is undefined).
     */
@@ -127,7 +132,7 @@ object Judge {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val dec = org.apache.spark.sql.types.DecimalType(18, 8)
     val cells = df.groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
-      .agg(count(lit(1)).as("__c")).persist()
+      .agg(count(lit(1)).as("__c")).stageCheckpoint(false)
     val tot = cells.agg(sum(col("__c")).as("n"),
       sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L))
         .as("__agree"))
@@ -205,10 +210,11 @@ object Judge {
     * P̄_e = Σ_k (Σ_i n_ik)² / (N·n)², κ = (P̄ − P̄_e)/(1 − P̄_e).
     *
     * Scale shape: one shuffle builds the (item, category) rating
-    * counts — at most m rows per item — then three bounded
-    * aggregates. All numerators and denominators are EXACT integers
-    * (DECIMAL(38,0) for the squared sums — (N·n)² overflows BIGINT
-    * past ~3·10⁹ ratings); P̄, P̄_e, and κ are each one IEEE division
+    * counts — at most m rows per item, staged like [[kappaReport]]'s
+    * table for its two consumers — then three bounded aggregates.
+    * All numerators and denominators are EXACT integers (DECIMAL(38,0)
+    * for the squared sums — (N·n)² overflows BIGINT past ~3·10⁹
+    * ratings); P̄, P̄_e, and κ are each one IEEE division
     * in a fixed expression shape, so any engine reproduces them
     * bit-for-bit. κ is NULL when P̄_e = 1 (all raters constant).
     */
@@ -222,7 +228,7 @@ object Judge {
       .select(col(idCol).as("__i"),
         explode(array(labelCols.map(col): _*)).as("__l"))
       .groupBy(col("__i"), col("__l"))
-      .agg(count(lit(1)).as("__c")).persist()
+      .agg(count(lit(1)).as("__c")).stageCheckpoint(false)
     val items = cells.agg(
       countDistinct(col("__i")).as("n_items"),
       sum((col("__c") * col("__c")).cast(dec38)).as("__s2"))

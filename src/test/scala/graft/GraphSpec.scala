@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.ops.Graph
 
 class GraphSpec extends SparkSpec with IterationContract {
@@ -92,6 +94,24 @@ class GraphSpec extends SparkSpec with IterationContract {
       broadcastMaxEdges = 0L).as[Long].head()
     assert(fast == shuffled, s"adj-intersect $fast != wedge $shuffled")
     assert(fast > 0)
+  }
+
+  test("triangleCount builds its adjacency once and broadcasts it once") {
+    val edges = (for {
+      b <- 0L until 20L; i <- 0L until 8L; j <- (i + 1) until 8L
+    } yield (b * 6 + i, b * 6 + j)).toDF("src", "dst")
+    val counting = Inspect.executed(spark)((action, _) => action == "head")(
+      Graph.triangleCount(edges, "src", "dst"))
+    // the counting job's own operators, through its adaptive stages but
+    // not into the cached frames it scans
+    object Aqe extends AdaptiveSparkPlanHelper
+    val plan = counting.executedPlan
+    val ops = Inspect.operators(Aqe.collect(plan) { case p => p.nodeName }.mkString("\n"))
+    assert(ops.count(_ == "BroadcastExchange") == 1, ops.mkString(", "))
+    assert(ops.count(_ == "ObjectHashAggregate") == 0, ops.mkString(", "))
+    // both sides read the one adjacency cache
+    val caches = Aqe.collect(plan) { case t: InMemoryTableScanExec => t.relation.cacheBuilder }
+    assert(caches.size == 2 && caches.distinct.size == 1, ops.mkString(", "))
   }
 
   test("pageRank is partitioning-independent (bit-identical fixed point)") {

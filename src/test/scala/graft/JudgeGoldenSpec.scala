@@ -102,6 +102,15 @@ class JudgeGoldenSpec extends SparkSpec {
     assert(c._2 == 1.0 && c._3 == 1.0 && c._4.isEmpty)
   }
 
+  test("kappaReport and fleissReport leave no cached frame behind") {
+    spark.catalog.clearCache()
+    val rows = Seq((1L, "x", "x", "y"), (2L, "y", "x", "y"), (3L, "y", "y", "y"))
+      .toDF("doc_id", "a", "b", "c")
+    Judge.kappaReport(rows, "a", "b").collect()
+    Judge.fleissReport(rows, "doc_id", Seq("a", "b", "c")).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("spearmanReport: monotone ties give 1, reversal gives -1, " +
     "constant side gives NULL, textbook tied example matches") {
     val mono = Seq((0.0, 0.0), (0.5, 0.5), (0.5, 0.5), (1.0, 1.0))

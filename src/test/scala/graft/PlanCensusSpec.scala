@@ -10,14 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * stops at N−1 queries cannot trip. This gate fails the build when
   * the committed census is stale: every registered query must have a
   * row, and no row may record a failed plan. Regenerate with
-  * `sbt "runMain graft.PlanInventory"` after plan-affecting changes.
+  * `sbt "runMain graft.Inspect census"` after plan-affecting changes.
   */
 class PlanCensusSpec extends AnyFunSuite {
 
   private val path = Paths.get("PLANS.md")
 
   test("PLANS.md census covers every registered query") {
-    assert(Files.exists(path), "PLANS.md missing — run graft.PlanInventory")
+    assert(Files.exists(path), "PLANS.md missing — run `runMain graft.Inspect census`")
     val lines = Files.readAllLines(path).asScala
     val rows = lines
       .filter(l => l.startsWith("| ") && !l.startsWith("| query") &&
