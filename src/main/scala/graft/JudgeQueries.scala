@@ -84,9 +84,9 @@ object JudgeQueries {
     QueryDef("judge_scores",
       (s, dir) => {
         val in = judgeInput(s, dir)
-        Judge.judgeScores(in, Template,
+        Judge.scoreWith(in, Template,
             Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-            judges, "factuality")
+            judges, Judge.score, "factuality")
           .select(col("doc_id"), col("name"), col("factuality"))
           .orderBy(col("doc_id"))
       },
@@ -100,7 +100,7 @@ object JudgeQueries {
     QueryDef("judge_eligibility",
       (s, dir) => {
         val in = judgeInput(s, dir)
-        JudgePanels.scoreWith(in, Template,
+        Judge.scoreWith(in, Template,
             Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
             JudgeModels.map(MockEligibilityJudge(_)),
             Judge.eligibilityScore, "eligibility")
@@ -120,7 +120,7 @@ object JudgeQueries {
     QueryDef("judge_eligibility_metrics",
       (s, dir) => {
         val in = judgeInput(s, dir)
-        JudgePanels.scoreWith(in, Template,
+        Judge.scoreWith(in, Template,
             Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
             JudgeModels.map(MockEligibilityJudge(_)),
             Judge.eligibilityScore, "eligibility")
@@ -158,9 +158,9 @@ object JudgeQueries {
     QueryDef("judge_metrics",
       (s, dir) => {
         val in = judgeInput(s, dir)
-        Judge.judgeScores(in, Template,
+        Judge.scoreWith(in, Template,
             Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-            judges, "factuality")
+            judges, Judge.score, "factuality")
           .createOrReplaceTempView("judged")
         s.sql(MetricsSql)
       },
@@ -317,9 +317,9 @@ object JudgeQueries {
       (s, dir) => {
         import org.apache.spark.sql.types.DecimalType
         val in = judgeInput(s, dir)
-        val judged = Judge.judgeScores(in, Template,
+        val judged = Judge.scoreWith(in, Template,
           Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-          judges, "factuality")
+          judges, Judge.score, "factuality")
         val rdec = col("reward").cast(DecimalType(18, 6))
         val jdec = col("factuality").cast(DecimalType(18, 6))
         judged
@@ -368,9 +368,9 @@ object JudgeQueries {
       (s, dir) => {
         import org.apache.spark.sql.types.DecimalType
         val in = judgeInput(s, dir)
-        val judged = Judge.judgeScores(in, Template,
+        val judged = Judge.scoreWith(in, Template,
           Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-          judges, "factuality")
+          judges, Judge.score, "factuality")
           .withColumn("len", length(col("src_text")).cast("long"))
           .withColumn("j4", round(col("factuality") * 4, 0).cast("long"))
           .withColumn("r6", round(

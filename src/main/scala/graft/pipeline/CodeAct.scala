@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
 
 /** CodeAct table-QA loop (reference agent_codeact + sandbox_run,
   * apps/poc-codaact-tableqa/tableqa_codeact.py:143-235): the LLM emits
@@ -111,6 +111,9 @@ final class ProcessSandbox(pythonExe: String = "python3",
       reader.start()
       val finished = p.waitFor(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
       if (!finished) p.destroyForcibly()
+      // after a normal exit, let the reader drain the pipe first:
+      // destroyForcibly closes the stream and drops unread output
+      else reader.join(timeoutMs)
       // loop the join until the reader is dead: a slow force-kill of a
       // runaway child can keep the pipe open past a single bounded
       // join, and the output/truncated snapshot below must not race
@@ -198,8 +201,9 @@ object CodeAct {
     (out, round, ok)
   }
 
-  /** DataFrame operator: run the CodeAct loop per row. Adds
-    * `<outCol>` (sandbox output), `<outCol>_rounds`, `<outCol>_ok`.
+  /** DataFrame operator: run the CodeAct loop per row, one concurrent
+    * call unit per row. Adds `<outCol>` (sandbox output),
+    * `<outCol>_rounds`, `<outCol>_ok`.
     */
   def codeAct(df: DataFrame, instructionCol: String, inputCol: String,
               client: LlmClient, sandbox: Sandbox, maxRounds: Int,
@@ -209,14 +213,13 @@ object CodeAct {
     val inIdx = schema.fieldIndex(inputCol)
     val outSchema = schema
       .add(outCol, StringType).add(s"${outCol}_rounds", IntegerType)
-      .add(s"${outCol}_ok", org.apache.spark.sql.types.BooleanType)
-    df.mapPartitions { it: Iterator[Row] =>
-      it.map { row =>
-        val (out, rounds, ok) = runLoop(client, sandbox,
-          row.getString(insIdx), row.getString(inIdx), maxRounds)
-        Row.fromSeq(row.toSeq :+ out :+ rounds :+ ok)
-      }
-    }(Encoders.row(outSchema))
+      .add(s"${outCol}_ok", BooleanType)
+    LlmClient.perRow(df, Encoders.row(outSchema)) { row =>
+      Seq(() => runLoop(client, sandbox,
+        row.getString(insIdx), row.getString(inIdx), maxRounds))
+    } { case (row, Seq((out, rounds, ok))) =>
+      Seq(Row.fromSeq(row.toSeq :+ out :+ rounds :+ ok))
+    }
   }
 
   // ---- DuckDB mirrors (used by the oracle harness) ----

@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
 
 /** The instruction-MapReduce engine (reference flow §3.1:
   * apps/instructions-mapreduce/inf.py + InstructionsRunnerBase.async_run,
@@ -14,9 +12,8 @@ import scala.concurrent.duration.Duration
   * - The reference loops rows sequentially and fans out instructions
   *   per row with asyncio.gather. Here rows parallelize across
   *   partitions/executors for free, and the per-row instruction
-  *   fan-out becomes Future-based request fan-out inside
-  *   mapPartitions, micro-batched (O7: batch size 8) on a bounded
-  *   JVM-wide I/O pool.
+  *   fan-out becomes concurrent call units of [[LlmClient.perRow]],
+  *   micro-batched (O7: batch size 8) on a bounded JVM-wide I/O pool.
   * - A stage's only inter-stage IR is a map<string,string> column
   *   (result map), exactly like the reference's `Instructions.result`.
   * - The LLM boundary is a pluggable LlmClient with per-executor LRU
@@ -25,12 +22,10 @@ import scala.concurrent.duration.Duration
   *
   * The LLM call is the one operator family that is deliberately NOT a
   * Catalyst expression: it is non-deterministic in production,
-  * side-effecting and latency-bound, so it lives in mapPartitions
+  * side-effecting and latency-bound, so it lives in a partition loop
   * where batching/concurrency are controllable (SURVEY §2.7).
   */
 object InstructionRunner {
-
-  val BatchSize = 8 // reference: model.abatch batches of 8 (O7)
 
   /** Stage-0 identity (reference impl/mapreduce/v0.py:42-46 +
     * json2str_kv, utils.py:20-27): project the row into a
@@ -66,28 +61,16 @@ object InstructionRunner {
     val outSchema = schema.add(outCol, MapType(StringType, StringType))
     val inIdx = schema.fieldIndex(inCol)
     val instructions = stage.instructions
-    df.mapPartitions { it: Iterator[Row] =>
-      // resolved on the executor: the I/O pool is JVM-local state, not
-      // closure state (an ExecutionContext is not serializable)
-      implicit val ec = LlmClient.ioExecutionContext
-      it.grouped(BatchSize).flatMap { batch =>
-        val rowFuts = batch.map { row =>
-          val input = row.getMap[String, String](inIdx)
-          Future.traverse(instructions) { ins =>
-            Future {
-              Prompts.userPrompt(ins, input).map { user =>
-                val msgs = Seq(
-                  ChatMessage("system", Prompts.sysPrompt(ins)),
-                  ChatMessage("user", user))
-                ins.name -> client.run(msgs)
-              }
-            }
-          }.map(outs => Row.fromSeq(row.toSeq :+ outs.flatten.toMap))
-        }
-        Await.result(Future.sequence(rowFuts), Duration.Inf)
-      }
-    }(Encoders.row(outSchema))
+    LlmClient.perRow(df, Encoders.row(outSchema)) { row =>
+      val input = row.getMap[String, String](inIdx)
+      instructions.map(ins => () => Prompts.userPrompt(ins, input).map(user =>
+        ins.name -> client.run(firstTurn(ins, user))))
+    }((row, outs) => Seq(Row.fromSeq(row.toSeq :+ outs.flatten.toMap)))
   }
+
+  /** The system + user opening of an instruction's conversation. */
+  private def firstTurn(ins: Instruction, user: String): Seq[ChatMessage] =
+    Seq(ChatMessage("system", Prompts.sysPrompt(ins)), ChatMessage("user", user))
 
   /** Run a whole pipeline config: stage-0 stringify, then each stage
     * feeding the next (reference run_with_configs,
@@ -131,23 +114,20 @@ object InstructionRunner {
     val schema = df.schema
     val outSchema = schema.add(outCol, StringType)
     val inIdx = schema.fieldIndex(inCol)
-    df.mapPartitions { it: Iterator[Row] =>
-      it.map { row =>
-        val input = row.getMap[String, String](inIdx)
-        val result = Prompts.userPrompt(ins, input).map { user0 =>
-          val sys = ChatMessage("system", Prompts.sysPrompt(ins))
-          var msgs = Seq(sys, ChatMessage("user", user0))
-          var content = client.run(msgs)
-          for (template <- turns) {
-            msgs = msgs :+ ChatMessage("assistant", content) :+
-              ChatMessage("user", s"$template\n$content")
-            content = client.run(msgs)
-          }
-          content
-        }.orNull
-        Row.fromSeq(row.toSeq :+ result)
-      }
-    }(Encoders.row(outSchema))
+    LlmClient.perRow(df, Encoders.row(outSchema)) { row =>
+      val input = row.getMap[String, String](inIdx)
+      // one unit per row: the turns of a conversation stay sequential
+      Seq(() => Prompts.userPrompt(ins, input).map { user0 =>
+        var msgs = firstTurn(ins, user0)
+        var content = client.run(msgs)
+        for (template <- turns) {
+          msgs = msgs :+ ChatMessage("assistant", content) :+
+            ChatMessage("user", s"$template\n$content")
+          content = client.run(msgs)
+        }
+        content
+      }.orNull)
+    }((row, result) => Seq(Row.fromSeq(row.toSeq ++ result)))
   }
 
   /** L7 — agentic dispatch (reference agentic MR supervisor fan-out,
@@ -182,27 +162,19 @@ object InstructionRunner {
     val keyIdx = schema.fieldIndex(sessionKeyCol)
     val instructions = stage.instructions
     val stageName = stage.name
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.mapPartitions { it: Iterator[Row] =>
-      it.flatMap { row =>
-        val input = row.getMap[String, String](inIdx)
-        val session = LlmClient.sha256Hex(String.valueOf(row.get(keyIdx))).take(32)
-        instructions.map { ins =>
-          Prompts.userPrompt(ins, input) match {
-            case Some(user) =>
-              val msgs = Seq(
-                ChatMessage("system", Prompts.sysPrompt(ins)),
-                ChatMessage("user", user))
-              val out = client.run(msgs)
-              InstructionTrace(session, stageName, ins.name,
-                msgs :+ ChatMessage("assistant", out), out, finished = true)
-            case None =>
-              InstructionTrace(session, stageName, ins.name, Nil, null,
-                finished = false)
-          }
-        }
-      }
-    }.toDF()
+    LlmClient.perRow(df, Encoders.product[InstructionTrace]) { row =>
+      val input = row.getMap[String, String](inIdx)
+      val session = LlmClient.sha256Hex(String.valueOf(row.get(keyIdx))).take(32)
+      instructions.map(ins => () => Prompts.userPrompt(ins, input) match {
+        case Some(user) =>
+          val msgs = firstTurn(ins, user)
+          val out = client.run(msgs)
+          InstructionTrace(session, stageName, ins.name,
+            msgs :+ ChatMessage("assistant", out), out, finished = true)
+        case None =>
+          InstructionTrace(session, stageName, ins.name, Nil, null,
+            finished = false)
+      })
+    }((_, traces) => traces).toDF()
   }
 }

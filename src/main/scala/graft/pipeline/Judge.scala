@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 import graft.ops.Tuning.StagedFrame
 
 /** LLM-as-a-judge operator (reference FactsMetrics,
@@ -58,28 +58,20 @@ object Judge {
   }
 
   /** Judge a DataFrame: fill `template` per row from the given
-    * (placeholder → column index) bindings, run every judge, average
-    * the scores into a new double column. Runs in mapPartitions with
-    * the shared I/O pool — one concurrent request per judge per row,
-    * mirroring the reference's per-metric asyncio.gather across the
-    * judge panel (eval_with_facts.py:503-516).
+    * (placeholder → column index) bindings, run every judge, map each
+    * label through `scoreFn` and average the panel's scores into a new
+    * double column. One concurrent request per judge per row, mirroring
+    * the reference's per-metric asyncio.gather across the judge panel
+    * (eval_with_facts.py:503-516). The reference judges two metrics
+    * with different rubrics: factuality ([[score]]) and eligibility
+    * ([[eligibilityScore]]).
     */
-  def judgeScores(df: DataFrame, template: String,
-                  bindings: Map[String, String], judges: Seq[LlmClient],
-                  outCol: String): DataFrame = {
-    val schema = df.schema
-    val idx = bindings.map { case (ph, c) => ph -> schema.fieldIndex(c) }
-    val outSchema = schema.add(outCol, DoubleType)
-    df.mapPartitions { it: Iterator[Row] =>
-      it.map { row =>
-        val vars = idx.map { case (ph, i) => ph -> String.valueOf(row.get(i)) }
-        val user = fillTemplate(template, vars)
-        val msgs = Seq(ChatMessage("user", user))
-        val scores = judges.map(j => score(parseLabel(j.run(msgs))))
-        Row.fromSeq(row.toSeq :+ scores.sum / scores.size)
-      }
-    }(Encoders.row(outSchema))
-  }
+  def scoreWith(df: DataFrame, template: String,
+                bindings: Map[String, String], judges: Seq[LlmClient],
+                scoreFn: Option[String] => Double,
+                outCol: String): DataFrame =
+    panel(df, template, bindings, judges, df.schema.add(outCol, DoubleType))(
+      resp => scoreFn(parseLabel(resp)))(scores => Seq(scores.sum / scores.size))
 
   /** Per-judge raw LABELS (not the panel average): one string column
     * per judge, parse failures as "parse_fail". The input to
@@ -90,19 +82,25 @@ object Judge {
                   bindings: Map[String, String], judges: Seq[LlmClient],
                   outCols: Seq[String]): DataFrame = {
     require(outCols.size == judges.size, "one output column per judge")
-    val schema = df.schema
-    val idx = bindings.map { case (ph, c) => ph -> schema.fieldIndex(c) }
-    val outSchema = outCols.foldLeft(schema)(
-      (s, c) => s.add(c, org.apache.spark.sql.types.StringType))
-    df.mapPartitions { it: Iterator[Row] =>
-      it.map { row =>
-        val vars = idx.map { case (ph, i) => ph -> String.valueOf(row.get(i)) }
-        val msgs = Seq(ChatMessage("user", fillTemplate(template, vars)))
-        val labels = judges.map(j =>
-          parseLabel(j.run(msgs)).getOrElse("parse_fail"))
-        Row.fromSeq(row.toSeq ++ labels)
-      }
-    }(Encoders.row(outSchema))
+    panel(df, template, bindings, judges,
+        outCols.foldLeft(df.schema)((s, c) => s.add(c, StringType)))(
+      resp => parseLabel(resp).getOrElse("parse_fail"))(labels => labels)
+  }
+
+  /** One call unit per judge per row: the filled template as the only
+    * user message, each response read by `read`; `cols` turns the
+    * judges' results (in judge order) into the appended columns.
+    */
+  private def panel[U](df: DataFrame, template: String,
+                       bindings: Map[String, String], judges: Seq[LlmClient],
+                       outSchema: StructType)(read: String => U)(
+      cols: Seq[U] => Seq[Any]): DataFrame = {
+    val idx = bindings.map { case (ph, c) => ph -> df.schema.fieldIndex(c) }
+    LlmClient.perRow(df, Encoders.row(outSchema)) { row =>
+      val vars = idx.map { case (ph, i) => ph -> String.valueOf(row.get(i)) }
+      val msgs = Seq(ChatMessage("user", fillTemplate(template, vars)))
+      judges.map(j => () => read(j.run(msgs)))
+    }((row, outs) => Seq(Row.fromSeq(row.toSeq ++ cols(outs))))
   }
 
   /** Cohen's kappa between two categorical annotator columns — the
@@ -249,30 +247,6 @@ object Judge {
       .select(col("n_items"), lit(n).as("n_raters"),
         r6(pbar).as("pbar"), r6(pe).as("pe"),
         when(pe < 1.0d, r6((pbar - pe) / (lit(1.0d) - pe))).as("kappa"))
-  }
-}
-
-/** Generalized panel scoring with a custom label→score mapping (the
-  * reference judges two metrics with different rubrics: factuality
-  * {1.0, 0.0, 0.5-on-parse-fail} and eligibility {1.0, 0.25, 0.0}).
-  */
-object JudgePanels {
-
-  def scoreWith(df: org.apache.spark.sql.DataFrame, template: String,
-                bindings: Map[String, String], judges: Seq[LlmClient],
-                scoreFn: Option[String] => Double,
-                outCol: String): org.apache.spark.sql.DataFrame = {
-    val schema = df.schema
-    val idx = bindings.map { case (ph, c) => ph -> schema.fieldIndex(c) }
-    val outSchema = schema.add(outCol, org.apache.spark.sql.types.DoubleType)
-    df.mapPartitions { it: Iterator[org.apache.spark.sql.Row] =>
-      it.map { row =>
-        val vars = idx.map { case (ph, i) => ph -> String.valueOf(row.get(i)) }
-        val msgs = Seq(ChatMessage("user", Judge.fillTemplate(template, vars)))
-        val scores = judges.map(j => scoreFn(Judge.parseLabel(j.run(msgs))))
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ scores.sum / scores.size)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 }
 

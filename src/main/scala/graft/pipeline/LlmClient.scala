@@ -3,7 +3,10 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.concurrent.Executors
-import scala.concurrent.ExecutionContext
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Pluggable LLM client used inside the instruction operators
   * (reference LlmCli, src/python/instructionspipe/llm_cli.py:31-138).
@@ -71,11 +74,12 @@ object LlmClient {
   def cacheKey(msgs: Seq[ChatMessage]): String =
     sha256Hex(msgs.map(m => s"${m.role}\u0000${m.content}").mkString("\u0001"))
 
-  /** Bounded shared executor for in-partition request fan-out — the
-    * Scala analogue of the reference's per-row asyncio.gather
-    * (instructions_runners.py:144-148). One JVM-wide pool sized below
-    * the executor's task slots so LLM I/O concurrency doesn't starve
-    * Spark's own task threads.
+  /** Shared executor for in-partition request fan-out — the Scala
+    * analogue of the reference's per-row asyncio.gather
+    * (instructions_runners.py:144-148). A fixed 8 threads per JVM at
+    * every core count, independent of the executor's task slots: it
+    * bounds how many model calls one JVM has in flight, not CPU use
+    * (task threads sit in [[perRow]]'s await while the pool calls).
     */
   lazy val ioExecutionContext: ExecutionContext =
     ExecutionContext.fromExecutorService(
@@ -84,6 +88,37 @@ object LlmClient {
         t.setDaemon(true)
         t
       }))
+
+  val BatchSize = 8 // reference: model.abatch batches of 8 (O7)
+
+  /** The per-row LLM operator every pipeline operator runs through:
+    * each partition is read in batches of [[BatchSize]] rows; `units`
+    * turns a row into independent call units, and every unit of a
+    * batch runs concurrently on [[ioExecutionContext]] while the task
+    * thread awaits the batch. `emit` then builds the output rows from
+    * each input row and its unit results (in unit order), keeping
+    * input order.
+    *
+    * Units block only on calls and never wait on the pool, so the
+    * fixed pool cannot deadlock. Each unit runs under the task's
+    * TaskContext (set on the pool thread, unset after the unit), as
+    * Spark's PythonRunner writer thread does: ProcessSandbox's
+    * driver-only guard must still fire on a pool thread.
+    */
+  def perRow[U, R](df: DataFrame, enc: Encoder[R])(units: Row => Seq[() => U])(
+      emit: (Row, Seq[U]) => IterableOnce[R]): Dataset[R] =
+    df.mapPartitions { it: Iterator[Row] =>
+      val task = TaskContext.get()
+      // resolved on the executor: the I/O pool is JVM-local state, not
+      // closure state (an ExecutionContext is not serializable)
+      implicit val ec: ExecutionContext = ioExecutionContext
+      it.grouped(BatchSize).flatMap { batch =>
+        val calls = batch.map(row => Future.traverse(units(row))(unit =>
+          Future(TaskContext.withTaskContext(task)(unit()))))
+        val results = Await.result(Future.sequence(calls), Duration.Inf)
+        batch.iterator.zip(results).flatMap(emit.tupled)
+      }
+    }(enc)
 }
 
 /** Per-executor LRU response cache (reference cache.py:24-62: in-mem

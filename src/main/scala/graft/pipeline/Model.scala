@@ -80,10 +80,4 @@ object Prompts {
 
   def isInvalid(v: String): Boolean =
     v == null || InvalidSet.contains(v)
-
-  /** Markdown render of a stage result map in instruction order
-    * (reference instructions_to_md, instructions.py:133-141).
-    */
-  def resultMarkdown(names: Seq[String], result: collection.Map[String, String]): String =
-    names.flatMap(n => result.get(n).map(v => s"# $n\n$v\n")).mkString("\n")
 }

@@ -62,10 +62,10 @@ class JudgeGoldenSpec extends SparkSpec {
     ("c11", "weight 70 kg at 2024-01-01; weight 68 kg at 2024-06-01", "weight 68 kg", 1.0))
 
   test("golden cases: panel factuality within ±0.15 of ground truth") {
-    val judged = Judge.judgeScores(
+    val judged = Judge.scoreWith(
       cases.map(c => (c._1, c._2, c._3)).toDF("name", "src_text", "gen_text"),
       Template, Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-      Seq(RuleJudge(false), RuleJudge(true)), "factuality")
+      Seq(RuleJudge(false), RuleJudge(true)), Judge.score, "factuality")
     val scores = judged.select("name", "factuality")
       .as[(String, Double)].collect().toMap
     for ((name, _, _, gt) <- cases)
@@ -74,10 +74,10 @@ class JudgeGoldenSpec extends SparkSpec {
   }
 
   test("disagreeing panel averages to 0.5 band") {
-    val judged = Judge.judgeScores(
+    val judged = Judge.scoreWith(
       Seq(("x", "fact one", "fact one")).toDF("name", "src_text", "gen_text"),
       Template, Map("__SRC__" -> "src_text", "__GEN__" -> "gen_text"),
-      Seq(RuleJudge(false), ContrarianJudge()), "factuality")
+      Seq(RuleJudge(false), ContrarianJudge()), Judge.score, "factuality")
     assert(judged.select("factuality").as[Double].head() == 0.5)
   }
 

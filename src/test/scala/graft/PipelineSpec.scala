@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import graft.pipeline._
 
 class PipelineSpec extends SparkSpec {
@@ -120,10 +124,91 @@ class PipelineSpec extends SparkSpec {
     assert(salted == plain)
   }
 
+  // ---- per-row LLM operator contract: concurrency, order, failure ----
+
+  /** 16 rows in one partition, in doc_id order. */
+  private def slowDocs = (1 to 16).map(i => (i.toLong, s"doc $i"))
+    .toDF("doc_id", "text").coalesce(1).withColumn("q", lit("compute"))
+  private def slowSt0 = InstructionRunner.stringifyKv(slowDocs, Seq("doc_id", "text"), "s0")
+  private val ids = (1L to 16L).map(_.toString)
+
+  /** Each per-row LLM operator over the 16 rows, with `model(role)`
+    * as its model(s); the result's first column names its input row.
+    */
+  private val operators: Seq[(String, (String => LlmClient) => DataFrame)] = Seq(
+    "runStage" -> (m => InstructionRunner.runStage(slowSt0, stage, m("stage"), "s0", "r")
+      .select("doc_id")),
+    "runChain" -> (m => InstructionRunner.runChain(slowSt0, ins, Seq("Check."), m("chain"),
+      "s0", "r").select("doc_id")),
+    "traceStage" -> (m => InstructionRunner.traceStage(slowSt0, stage, m("trace"), "s0",
+      "doc_id").select("session_id")),
+    "scoreWith" -> (m => Judge.scoreWith(slowDocs, "claim __T__", Map("__T__" -> "text"),
+      Seq(m("judge-a"), m("judge-b")), Judge.score, "s").select("doc_id")),
+    "panelLabels" -> (m => Judge.panelLabels(slowDocs, "claim __T__", Map("__T__" -> "text"),
+      Seq(m("judge-a"), m("judge-b")), Seq("a", "b")).select("doc_id")),
+    "codeAct" -> (m => CodeAct.codeAct(slowDocs, "q", "text", m("codeact"), MockSandbox(),
+      1, "out").select("doc_id")))
+
+  for ((name, run) <- operators) {
+    test(s"$name calls the model concurrently and keeps row order") {
+      val tag = s"$name-${System.nanoTime()}"
+      SlowClient.reset()
+      val got = run(role => SlowClient(s"$tag-$role"))
+        .collect().map(r => String.valueOf(r.get(0))).toSeq
+      val want =
+        if (name == "traceStage") ids.map(LlmClient.sha256Hex(_).take(32)) else ids
+      assert(got == want, s"$name changed row order")
+      assert(SlowClient.peak.get > 1, s"$name called the model one row at a time")
+    }
+
+    test(s"$name fails with the model's exception when one row's call throws") {
+      val tag = s"$name-fail-${System.nanoTime()}"
+      val action = Future(run(role => SlowClient(s"$tag-$role", failOn = "doc 5")).collect())(
+        ExecutionContext.global)
+      val result = Await.ready(action, 2.minutes).value.get
+      assert(result.isFailure, s"$name ignored the failed call")
+      assert(causes(result.failed.get).exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage == "model failed on doc 5"), s"got ${result.failed.get}")
+    }
+  }
+
   test("markdownExpr skips missing entries") {
     val d = Seq(Map("a" -> "1")).toDF("m")
     val md = d.select(InstructionRunner.markdownExpr(Seq("a", "b"), col("m")))
       .as[String].head()
     assert(md == "# a\n1\n")
+  }
+}
+
+/** A model that takes about 20 ms a call and records the peak number of
+  * calls in flight; it throws on any prompt containing `failOn`. The
+  * client ships to tasks as a serialized copy, so the counters live in
+  * the companion. `tag` keeps each test's prompts out of the others'
+  * cache entries.
+  */
+final case class SlowClient(tag: String, failOn: String = null) extends LlmClient {
+  override def cacheId: String = s"slow:$tag"
+
+  override def complete(msgs: Seq[ChatMessage], attempt: Int): LlmResponse = {
+    val user = msgs.reverse.find(_.role == "user").map(_.content).getOrElse("")
+    if (failOn != null && user.contains(failOn))
+      throw new IllegalStateException(s"model failed on $failOn")
+    SlowClient.peak.accumulateAndGet(SlowClient.inFlight.incrementAndGet(), math.max)
+    try {
+      Thread.sleep(20)
+      LlmResponse("""{"label": "supported"}""", "stop")
+    } finally SlowClient.inFlight.decrementAndGet()
+  }
+}
+
+object SlowClient {
+  val inFlight = new AtomicInteger
+  val peak = new AtomicInteger
+  /** Waits for calls left over from a failed action, then clears the peak. */
+  def reset(): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (inFlight.get != 0 && System.nanoTime() < deadline) Thread.sleep(5)
+    assert(inFlight.get == 0, "model calls still in flight")
+    peak.set(0)
   }
 }

@@ -84,16 +84,39 @@ class SandboxSpec extends SparkSpec {
         it.map(_ => sb.run("print('must never run')"))
       }.collect()
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(ex).exists(c => c.isInstanceOf[IllegalStateException] &&
-      c.getMessage.contains("driver-only")),
+    assert(causes(ex).exists(driverOnly),
       s"expected the driver-only IllegalStateException, got $ex")
   }
+
+  test("executor-ban invariant on the codeAct path: the operator throws, no python starts") {
+    // codeAct runs its rounds on the LLM I/O pool, not the task thread;
+    // the pool thread carries the task's TaskContext, so the guard fires
+    import spark.implicits._
+    val marker = java.nio.file.Files.createTempDirectory("sandbox_ban")
+      .resolve("ran")
+    val ex = intercept[Exception] {
+      CodeAct.codeAct(Seq(("compute", "6*7")).toDF("q", "input"), "q", "input",
+        MarkerCodeClient(marker.toString), new ProcessSandbox(), 2, "out")
+        .collect()
+    }
+    assert(causes(ex).exists(driverOnly),
+      s"expected the driver-only IllegalStateException, got $ex")
+    assert(!java.nio.file.Files.exists(marker),
+      "generated code ran inside a Spark task")
+  }
+
+  private def driverOnly(t: Throwable): Boolean =
+    t.isInstanceOf[IllegalStateException] && t.getMessage.contains("driver-only")
 
   test("MockSandbox stays the distributed/oracle path (unchanged contract)") {
     val m = MockSandbox()
     val out = m.run("run(abc)")
     assert(out.startsWith("OK:") || out.startsWith("Traceback: err "))
   }
+}
+
+/** Emits python that would create `marker` if it ever ran. */
+final case class MarkerCodeClient(marker: String) extends LlmClient {
+  override def complete(msgs: Seq[ChatMessage], attempt: Int): LlmResponse =
+    LlmResponse(s"<code>open(r'$marker', 'w').write('ran')</code>", "stop")
 }

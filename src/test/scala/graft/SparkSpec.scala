@@ -10,6 +10,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `t` and its chain of causes, outermost first. */
+  def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
 }
 
 object SparkSpec {
