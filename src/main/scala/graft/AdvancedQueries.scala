@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.ops.{Cost, Multimodal}
 import graft.pipeline._
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Advanced operator queries: CodeAct repair loop, self-verified
   * multi-turn chain, agentic dispatch, cost estimation, multimodal

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions._
 import graft.ops.Similarity
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Deduplication query registry: exact, MinHash-LSH, n-gram Jaccard,
   * SimHash, embedding-cosine — the corpus-dedup family (reference

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions._
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Event-stream analytics over the `events` table (batch mirror of the
   * streaming operators in graft.streaming): tumbling/sliding windows,

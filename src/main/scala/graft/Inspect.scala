@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -129,12 +130,12 @@ object Inspect {
     jobs.values.map(_._2).toSeq
   }
 
-  /** The first query execution that `body` completes and `wanted`
-    * accepts (by action name and execution). Query-execution events
-    * share the listener queue, so the fences of [[listening]] hold.
+  /** Every query execution that `body` completes and `wanted` accepts
+    * (by action name and execution), in completion order. Query-execution
+    * events share the listener queue, so the fences of [[listening]] hold.
     */
-  def executed(spark: SparkSession)(wanted: (String, QueryExecution) => Boolean)
-              (body: => Any): QueryExecution = {
+  def executions(spark: SparkSession)(wanted: (String, QueryExecution) => Boolean)
+                (body: => Any): Seq[QueryExecution] = {
     val seen = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
@@ -143,14 +144,14 @@ object Inspect {
     }
     listening(spark)(spark.listenerManager.register(listener),
       spark.listenerManager.unregister(listener))(body)
-    Option(seen.peek()).getOrElse(sys.error("no matching query execution completed"))
+    seen.asScala.toList
   }
 
   def plan(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = names.foreach { name =>
     println(s"\n========== $name ==========")
-    try println(executed(spark)((_, qe) => qe.logical.isInstanceOf[V2WriteCommand])(
+    try println(executions(spark)((_, qe) => qe.logical.isInstanceOf[V2WriteCommand])(
         SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
-      .explainString(ExplainMode.fromString("formatted")))
+      .head.explainString(ExplainMode.fromString("formatted")))
     catch { case e: Throwable => println(s"plan failed: $e") }
     finally spark.catalog.clearCache()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions._
 import graft.ops.Relational
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Relational / ETL query registry (SURVEY §2.2–§2.5) over the
   * TPC-H-ish tables. Each query is the declarative plan you'd want at

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.ops.Similarity
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Embedding-table operators: int8 quantization (storage), and
   * approximate-nearest-neighbor search — brute-force cosine top-k as
@@ -234,6 +235,28 @@ object SimilarityQueries {
          | THEN ${1L << k} ELSE 0 END)""".stripMargin
     }.mkString(" + ")
 
+  /** The first [[NumQueryVecs]] vectors of `e` (vec_id, emb, nrm) as
+    * the query side (query_id, qemb, qnrm).
+    */
+  private def queryVecs(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < NumQueryVecs)
+      .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
+        col("nrm").as("qnrm"))
+
+  /** Exact top-[[TopK]] cosine neighbors (query_id, neighbor_id, cos,
+    * rank) of every query vector of `e`, by brute force against the
+    * broadcast query side.
+    */
+  private def exactTopK(e: DataFrame): DataFrame = {
+    val scored = e.join(broadcast(queryVecs(e)), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
+          col("qnrm"), col("nrm")), 6).as("cos"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(desc("cos"), col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= TopK)
+  }
+
   def defs: Seq[QueryDef] = Seq(
 
     // IVF nprobe → recall tuning curve: the dial an index operator
@@ -255,17 +278,7 @@ object SimilarityQueries {
         val e = raw.select(col("vec_id"),
             col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        val exact = scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
+        val exact = exactTopK(e)
           .select(col("query_id"), col("neighbor_id"))
           .stageCheckpoint(true) // reused once per curve point
         val nTrue = exact.count()
@@ -433,18 +446,7 @@ object SimilarityQueries {
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
-          .orderBy(col("query_id"), col("rank"))
+        exactTopK(e).orderBy(col("query_id"), col("rank"))
       },
       Some(s"""WITH q AS (
         |  SELECT vec_id AS query_id, embedding AS qemb FROM embeddings
@@ -600,17 +602,7 @@ object SimilarityQueries {
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        val exact = scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
+        val exact = exactTopK(e)
         val raw = Tables.load(s, dir, "embeddings")
         val cents = raw.where(col("vec_id") < NumCells)
           .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
@@ -689,17 +681,7 @@ object SimilarityQueries {
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        val exact = scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
+        val exact = exactTopK(e)
         def word(c: org.apache.spark.sql.Column, wIdx: Int) =
           aggregate(
             transform(slice(c, wIdx * 16 + 1, 16),
@@ -792,17 +774,7 @@ object SimilarityQueries {
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        val exact = scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
+        val exact = exactTopK(e)
         def word(c: org.apache.spark.sql.Column, wIdx: Int) =
           aggregate(
             transform(slice(c, wIdx * 8 + 1, 8),
@@ -913,17 +885,8 @@ object SimilarityQueries {
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("emb"))
           .withColumn("nrm", vectorNorm(col("emb")))
-        val q = e.where(col("vec_id") < NumQueryVecs)
-          .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
-            col("nrm").as("qnrm"))
-        val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(cosineFromNorms(dotProduct(col("qemb"), col("emb")),
-              col("qnrm"), col("nrm")), 6).as("cos"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(desc("cos"), col("neighbor_id"))
-        val exact = scored.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= TopK)
+        val q = queryVecs(e)
+        val exact = exactTopK(e)
         def word(c: org.apache.spark.sql.Column, wIdx: Int) =
           aggregate(
             transform(slice(c, wIdx * 8 + 1, 8),

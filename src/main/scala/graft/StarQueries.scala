@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions._
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Additional star-schema shapes (TPC-H Q4/Q6/Q8/Q12/Q14/Q19
   * adaptations over the driver's schema — the testdata lineitem has no

@@ -43,8 +43,4 @@ object Tables {
       }
     } else df
   }
-
-  /** Register all tables as temp views for spark.sql queries. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.GraftFunctions._
 import graft.ops.{Similarity, Text}
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** Text-analysis query registry (pretraining-corpus signals over the
   * `documents` table): token counting, quality scoring, language-ID,

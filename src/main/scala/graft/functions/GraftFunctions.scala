@@ -78,11 +78,6 @@ object GraftFunctions {
     if (hashModeIsXx) lower(hex(xxhash64(norm))) else md5(norm)
   }
 
-  /** sha-256 cache key of a ChatML conversation
-    * (reference: llm_cli.py:101-104).
-    */
-  def chatmlKey(msgs: Column): Column = sha2(to_json(msgs), 256)
-
   /** Native one-pass 16-bit SimHash (see expressions.SimHash16). */
   def simhash16(c: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge

@@ -2,10 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components. Every loop
-  * here cuts, caches and hands off its rounds through [[Iterate]].
+  * here cuts, caches and hands off its frames through [[Stage]].
   */
 object Graph {
 
@@ -91,6 +90,26 @@ object Graph {
     pageRankImpl(edges, srcCol, dstCol, Some(seeds), iters, dampingNum,
       dampingDen, unit)
 
+  /** The cached inputs of the PageRank loops: the (src, dst) edge
+    * frame, out-degrees, the node set and its count.
+    */
+  private def rankInputs(edges: DataFrame, srcCol: String, dstCol: String,
+                         unit: Long): (DataFrame, DataFrame, DataFrame, Long) = {
+    val e = Stage.cached(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")))
+    val deg = Stage.cached(
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val nodes = Stage.cached(
+      e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
+    val nNodes = nodes.count()
+    // total-mass overflow canary: any node's incoming sum is ≤ the
+    // total rank mass ≤ nNodes·unit; past Long.MaxValue the BIGINT
+    // sum would wrap silently into a plausible-looking wrong rank.
+    require(nNodes <= Long.MaxValue / unit,
+      s"nNodes ($nNodes) × unit ($unit) exceeds Long range — shrink unit")
+    (e, deg, nodes, nNodes)
+  }
+
   private def pageRankImpl(edges: DataFrame, srcCol: String,
                            dstCol: String, seedsOpt: Option[DataFrame],
                            iters: Int, dampingNum: Long, dampingDen: Long,
@@ -98,7 +117,7 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be a proper fraction: $dampingNum/$dampingDen")
-    // Rounds chain through roots (Iterate.rounds): the whole iteration
+    // Rounds chain through roots (Stage.rounds): the whole iteration
     // runs under ONE action, the hand-off count, instead of paying an
     // action's scheduler/job floor `iters` times (the floor, not the
     // arithmetic, dominated the sf0.1 bench: 4 jobs × 5 rounds ≈
@@ -107,25 +126,13 @@ object Graph {
     // per-round cache loses no work; e/deg/nodes are persisted and
     // get cached by their first evaluating stage, then reused by
     // all later rounds of the same job.
-    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")))
-    val deg = Iterate.cached(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val nodes = Iterate.cached(
-      e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
+    val (e, deg, nodes, nNodes) = rankInputs(edges, srcCol, dstCol, unit)
     val base = (unit * (dampingDen - dampingNum)) / dampingDen
-
-    val nNodes = nodes.count()
-    // total-mass overflow canary: any node's incoming sum is ≤ the
-    // total rank mass ≤ nNodes·unit; past Long.MaxValue the BIGINT
-    // sum would wrap silently into a plausible-looking wrong rank.
-    require(nNodes <= Long.MaxValue / unit,
-      s"nNodes ($nNodes) × unit ($unit) exceeds Long range — shrink unit")
     // Personalized variant: a seed flag rides the node frame — r₀ and
     // the restart term are unit·[seed] instead of uniform. The seed
     // set is |seeds| ids joined once onto the |nodes| frame, so the
     // per-round shape is unchanged.
-    val nodesFlagged = Iterate.cached(seedsOpt match {
+    val nodesFlagged = Stage.cached(seedsOpt match {
       case None => nodes.withColumn("__seed", lit(1L))
       case Some(s) =>
         val sd = s.select(col("node").cast("long").as("node"))
@@ -135,8 +142,9 @@ object Graph {
     })
     // Broadcast regime (r13, the triangleCount dual-regime pattern):
     // the per-round contribution frame rd is |nodes| narrow rows, but
-    // it hangs off an RDD-rooted rank frame whose size Catalyst cannot
-    // estimate, so the planner SMJ'd every round — exchanging AND
+    // it hangs off a rooted rank frame, whose size estimate (its source
+    // plan's: a join's is the product of its inputs') is useless, so
+    // the planner SMJ'd every round — exchanging AND
     // sorting the EDGE frame once per round (profiled at sf0.1: one
     // ~23 MB edge exchange per round, the round's dominant stage; at
     // 100 TB it would dwarf everything else). nNodes is already known
@@ -162,7 +170,7 @@ object Graph {
     val bcastNodes = nNodes <= BroadcastMaxNodes &&
       e.count() >= BroadcastMinEdges
     val r0 = nodesFlagged.select(col("node"), (col("__seed") * lit(unit)).as("r"))
-    val last = Iterate.rounds(r0, iters) { r =>
+    val last = Stage.rounds(r0, iters) { r =>
       // Per-node contribution r div deg is computed on the NODE-sized
       // frame first (one narrow join), so the edge set — the only
       // big frame here — is joined exactly once per round. Joining
@@ -185,7 +193,7 @@ object Graph {
         .select(col("node"),
           (col("__seed") * lit(base) + expr(damped)).as("r"))
     }
-    Iterate.handOff(last, e, deg, nodes, nodesFlagged)
+    Stage.handOff(last, e, deg, nodes, nodesFlagged)
   }
 
   /** Convergence-gated [[pageRank]] (VERDICT r12 #5, completing r11
@@ -207,7 +215,7 @@ object Graph {
     * with the previous rank riding the aggregate as a zero-count
     * tagged row (own=1) in the contribution union — the
     * [[labelPropagationConverged]] idiom — so carrying p1 costs no
-    * extra join. Rounds run through [[Iterate.untilStable]] in lazy
+    * extra join. Rounds run through [[Stage.untilStable]] in lazy
     * chunks of `checkEvery` (one action per chunk); the stability test
     * is that action: one DECIMAL(38,0) aggregate over the persisted
     * node-sized boundary frame (the L1 delta is bounded by 2·n·unit,
@@ -228,24 +236,16 @@ object Graph {
     require(epsPerNodeUnits >= 0, s"epsPerNodeUnits: $epsPerNodeUnits")
     require(dampingNum > 0 && dampingNum < dampingDen,
       s"damping must be a proper fraction: $dampingNum/$dampingDen")
-    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")))
-    val deg = Iterate.cached(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val nodes = Iterate.cached(
-      e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
+    val (e, deg, nodes, nNodes) = rankInputs(edges, srcCol, dstCol, unit)
     val base = (unit * (dampingDen - dampingNum)) / dampingDen
-    val nNodes = nodes.count()
-    require(nNodes <= Long.MaxValue / unit,
-      s"nNodes ($nNodes) × unit ($unit) exceeds Long range — shrink unit")
     val epsTotal = BigDecimal(nNodes) * BigDecimal(epsPerNodeUnits)
     // p1 = rank one round back; the init value never reaches a test
     // (the first check happens after >= 1 round, which overwrites it)
-    val l0 = Iterate.cached(nodes.select(col("node"), lit(unit).as("r"),
+    val l0 = Stage.cached(nodes.select(col("node"), lit(unit).as("r"),
       lit(unit).as("p1")))
     // broadcast regime below the node threshold (r13) — same
-    // rationale and threshold as pageRankImpl: the RDD-rooted rank
-    // frame defeats size estimation, so the planner otherwise SMJ'd
+    // rationale and threshold as pageRankImpl: the rooted rank frame
+    // defeats size estimation, so the planner otherwise SMJ'd
     // and re-exchanged + sorted the EDGE frame every round. The gate
     // is the node count ALONE: unlike pageRankImpl there is no
     // BroadcastMinEdges floor, so any graph with at most
@@ -258,7 +258,7 @@ object Graph {
     // the empty graph: trivially stable.
     val l1Delta = (b: DataFrame) => b.agg(sum(abs(col("r") - col("p1"))
       .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head().getDecimal(0)
-    val res = Iterate.untilStable(l0, maxIters, checkEvery)(l1Delta)(
+    val res = Stage.untilStable(l0, maxIters, checkEvery)(l1Delta)(
       (_, d) => Option(d).forall(BigDecimal(_) < epsTotal)) { (cur, _) =>
       val rd = cur.select(col("node").as("src"), col("r")).join(deg, "src")
         .select(col("src"), expr("r div deg").as("c"))
@@ -282,7 +282,7 @@ object Graph {
         .select(col("node"), (lit(base) + expr(damped)).as("r"),
           col("pp").as("p1"))
     }
-    Iterate.handOff(res.frame.select(col("node"), col("r"),
+    Stage.handOff(res.frame.select(col("node"), col("r"),
         lit(res.rounds.toLong).as("rounds_run")).orderBy(col("node")),
       res.frame, e, deg, nodes)
   }
@@ -356,10 +356,9 @@ object Graph {
     // partial table is pure spill and raw repartition-then-distinct
     // wins 3.6× (×300: 280 vs 77 s). Callers feeding a massive
     // low-duplication pair stream set normRepartition = true.
-    val und = (if (normRepartition)
+    val und = Stage.cached(if (normRepartition)
         rawUnd.repartition(col("__u"), col("__v")).distinct()
       else rawUnd.distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("__u").as("__n"))
       .union(und.select(col("__v")))
       .groupBy(col("__n")).agg(count(lit(1)).as("__d"))
@@ -369,10 +368,9 @@ object Graph {
       .join(bdeg.select(col("__n").as("__v"), col("__d").as("__dv")), "__v")
     val lowFirst = col("__du") < col("__dv") ||
       (col("__du") === col("__dv") && col("__u") < col("__v"))
-    val oriented = withDeg.select(
+    val oriented = Stage.cached(withDeg.select(
         when(lowFirst, col("__u")).otherwise(col("__v")).as("s"),
-        when(lowFirst, col("__v")).otherwise(col("__u")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(lowFirst, col("__v")).otherwise(col("__u")).as("t")))
     val nEdges = oriented.count()
     val n = if (nEdges <= broadcastMaxEdges) {
       // ONE adjacency build and ONE broadcast: the probe side is the
@@ -382,11 +380,10 @@ object Graph {
       // broadcast frame built the relation twice: adaptive execution
       // wraps each scan of a cached frame in its own query stage, and
       // stage ids make the two exchanges canonically different, so
-      // exchange reuse never fired. The lazy persist shares the
+      // exchange reuse never fired. The lazy cache shares the
       // aggregate between the two sides.
-      val adj = oriented.groupBy(col("s").as("__n"))
-        .agg(sort_array(collect_list(col("t"))).as("__nbr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val adj = Stage.cached(oriented.groupBy(col("s").as("__n"))
+        .agg(sort_array(collect_list(col("t"))).as("__nbr")))
       val tri = adj
         .select(col("__nbr").as("__ns"), explode(col("__nbr")).as("__t"))
         .join(broadcast(adj), col("__t") === col("__n"), "left")
@@ -436,14 +433,9 @@ object Graph {
             maxIters: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIters >= 1, s"maxIters must be >= 1: $maxIters")
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e0 = Iterate.cached(und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b"), col("a"))))
+    val e0 = Stage.cached(bothWays(edges, srcCol, dstCol))
     val e = peelRounds(e0, e0.count(), k, maxIters).frame
-    Iterate.handOff(
+    Stage.handOff(
       e.groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
         .orderBy(col("node")), e)
   }
@@ -458,7 +450,7 @@ object Graph {
     * an identity filter), which is what lets a fixed-round unrolled
     * oracle match the early-exiting loop bit-for-bit in either regime.
     *
-    * Rounds run in CHUNKS of `checkEvery` ([[Iterate.untilStable]]):
+    * Rounds run in CHUNKS of `checkEvery` ([[Stage.untilStable]]):
     * one count at the chunk boundary materializes them all under a
     * single action — per-round counts paid the scheduler/job floor
     * `maxIters` times, which dominated the sf0.1 wall (VERDICT r8;
@@ -475,8 +467,8 @@ object Graph {
     * (isolated nodes have no rows); an emptied edge set is final.
     */
   private def peelRounds(e0: DataFrame, m0: Long, k: Int, maxIters: Int,
-                         checkEvery: Int = 4): Iterate.Stable[Long] =
-    Iterate.untilStable(e0, maxIters, checkEvery, cacheRounds = true)(
+                         checkEvery: Int = 4): Stage.Stable[Long] =
+    Stage.untilStable(e0, maxIters, checkEvery, cacheRounds = true)(
         _.count())((m, nm) => nm == 0 || m.contains(nm), start = Some(m0)) {
       (cur, _) =>
         val keep = cur.groupBy(col("u")).agg(count(lit(1)).as("__d"))
@@ -515,15 +507,10 @@ object Graph {
     require(kMax >= 1, s"kMax must be >= 1: $kMax")
     require(maxItersPerLevel >= 1,
       s"maxItersPerLevel must be >= 1: $maxItersPerLevel")
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    var e = Iterate.cached(und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b"), col("a"))))
+    var e = Stage.cached(bothWays(edges, srcCol, dstCol))
     // handed off NOW — the edge frame it reads dies next level
     def membership(frame: DataFrame, k: Int): DataFrame =
-      Iterate.handOff(frame.select(col("u").as("node")).distinct()
+      Stage.handOff(frame.select(col("u").as("node")).distinct()
         .withColumn("coreness", lit(k.toLong)))
     val levels = scala.collection.mutable.ArrayBuffer(membership(e, 1))
     var k = 2
@@ -536,9 +523,57 @@ object Graph {
       k += 1
     }
     e.unpersist()
-    Iterate.handOff(levels.reduce(_ union _)
+    Stage.handOff(levels.reduce(_ union _)
       .groupBy(col("node")).agg(max(col("coreness")).as("coreness"))
       .orderBy(col("node")), levels.toSeq: _*)
+  }
+
+  /** `edges` as an undirected simple graph listed both ways: a (u, v)
+    * row for each direction of every distinct non-loop edge.
+    */
+  private def bothWays(edges: DataFrame, srcCol: String,
+                       dstCol: String): DataFrame = {
+    val und = edges.select(
+        least(col(srcCol), col(dstCol)).cast("long").as("a"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+      .where(col("a") =!= col("b")).distinct()
+    und.select(col("a").as("u"), col("b").as("v"))
+      .union(und.select(col("b"), col("a")))
+  }
+
+  /** Label bound of the packed argmax in [[labelRound]]: ids < 2³¹. */
+  private val LabelShift = 1L << 31
+
+  /** The edge frame of [[labelPropagation]] and
+    * [[labelPropagationConverged]]: [[bothWays]], cached hash-partitioned
+    * and sorted on the neighbor end `v`, after checking the node ids
+    * against [[LabelShift]]. The caller owns it.
+    */
+  private[graft] def labelEdges(edges: DataFrame, srcCol: String,
+                                dstCol: String): DataFrame = {
+    val parts = Tuning.sessionShufflePartitions(edges.sparkSession)
+    val e = Stage.cached(bothWays(edges, srcCol, dstCol)
+      .repartition(parts, col("v")).sortWithinPartitions(col("v")))
+    val maxId = e.agg(coalesce(max(col("u")), lit(-1L))).head().getLong(0)
+    require(maxId < LabelShift,
+      s"node ids must be < 2^31 for the packed argmax: max id $maxId")
+    e
+  }
+
+  /** One synchronous [[labelPropagation]] round over [[labelEdges]]
+    * `e`: every node of `l` (node, lab) takes its neighbors' most
+    * frequent label, ties toward the smallest.
+    */
+  private[graft] def labelRound(e: DataFrame)(l: DataFrame): DataFrame = {
+    val nbr = e.join(l.withColumnRenamed("node", "v"), "v")
+      .select(col("u").as("node"), col("lab"))
+    val cnt = nbr.groupBy(col("node"), col("lab"))
+      .agg(count(lit(1)).as("c"))
+    cnt.groupBy(col("node"))
+      .agg(max(col("c") * lit(LabelShift) + (lit(LabelShift - 1) - col("lab")))
+        .as("p"))
+      .select(col("node"), (lit(LabelShift - 1) - (col("p") % lit(LabelShift)))
+        .as("lab"))
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -557,12 +592,10 @@ object Graph {
     * Scale shape per round — TWO exchanges total, neither
     * edge-frame-sized twice (r11 rework; was four):
     * 1. the |nodes|-row label frame exchanges to meet the edge
-    *    frame, which is cached as a PLAIN DataFrame pre-partitioned
-    *    and pre-sorted on the neighbor end (`v`) — an
-    *    InMemoryTableScan keeps the cached plan's partitioning and
-    *    ordering, so the join never re-exchanges or re-sorts the big
-    *    side (an RDD-rooted cache erases both and paid an edge-sized
-    *    exchange + sort EVERY round);
+    *    frame ([[labelEdges]]), a cached root pre-partitioned and
+    *    pre-sorted on the neighbor end (`v`) — the root keeps that
+    *    partitioning and ordering, so the join never re-exchanges or
+    *    re-sorts the big side (GraphSpec pins this);
     * 2. one `repartition(node)` exchange carries the raw
     *    (node, label) pairs, and BOTH aggregates ride it: the
     *    (node, label) count and the per-node argmax are each
@@ -573,7 +606,7 @@ object Graph {
     * (2³¹−1−label) — the hard_negatives_pool trick: no sort, no
     * window, and NOT `mode()` (the r10 A/B measured the
     * TypedImperativeAggregate 2.3× worse — SCALING.md). Rounds chain
-    * through roots ([[Iterate.rounds]]) exactly like [[pageRank]], so
+    * through roots ([[Stage.rounds]]) exactly like [[pageRank]], so
     * the whole iteration runs under ONE action. Node ids must fit [0, 2³¹) for the packing (checked);
     * counts are ≤ n < 2³¹ by the same bound.
     *
@@ -585,37 +618,12 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    // plain-DataFrame cache, deliberately NOT an RDD root: the
-    // InMemoryTableScan advertises hashpartitioning(v) + ordering,
-    // so every round's neighbor join leaves the edge frame in place
-    val e = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b"), col("a")))
-      .repartition(col("v"))
-      .sortWithinPartitions(col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val shift = 1L << 31
-    val maxId = e.agg(coalesce(max(col("u")), lit(-1L))).head().getLong(0)
-    require(maxId < shift,
-      s"node ids must be < 2^31 for the packed argmax: max id $maxId")
+    val e = labelEdges(edges, srcCol, dstCol)
     // both directions are present, so distinct u covers every node
     val l0 = e.select(col("u").as("node")).distinct()
       .withColumn("lab", col("node"))
-    val l = Iterate.rounds(l0, iters) { l =>
-      val nbr = e.join(l.withColumnRenamed("node", "v"), "v")
-        .select(col("u").as("node"), col("lab"))
-      val cnt = nbr.groupBy(col("node"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-      cnt.groupBy(col("node"))
-        .agg(max(col("c") * lit(shift) + (lit(shift - 1) - col("lab")))
-          .as("p"))
-        .select(col("node"), (lit(shift - 1) - (col("p") % lit(shift)))
-          .as("lab"))
-    }
-    Iterate.handOff(
+    val l = Stage.rounds(l0, iters)(labelRound(e))
+    Stage.handOff(
       l.select(col("node"), col("lab").as("community")).orderBy(col("node")),
       e)
   }
@@ -646,7 +654,7 @@ object Graph {
     * keeps the in-chunk lazy chain linear. Scale shape per round is
     * [[labelPropagation]]'s TWO exchanges (the tagged union adds
     * |nodes| rows to an edge-sized exchange — noise). Rounds run
-    * through [[Iterate.untilStable]] in lazy chunks of `checkEvery`
+    * through [[Stage.untilStable]] in lazy chunks of `checkEvery`
     * (one action per chunk); the stability test is that action: one count
     * of unstable nodes over the persisted node-sized boundary frame.
     *
@@ -667,29 +675,17 @@ object Graph {
       s"checkEvery must be even for the period-2 parity: $checkEvery")
     require(maxIters % checkEvery == 0,
       s"maxIters must be a multiple of checkEvery: $maxIters/$checkEvery")
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b"), col("a")))
-      .repartition(col("v"))
-      .sortWithinPartitions(col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val shift = 1L << 31
-    val maxId = e.agg(coalesce(max(col("u")), lit(-1L))).head().getLong(0)
-    require(maxId < shift,
-      s"node ids must be < 2^31 for the packed argmax: max id $maxId")
+    val e = labelEdges(edges, srcCol, dstCol)
     // p1/p2 = labels one/two rounds back; init values never reach a
     // stability test (first check is at round 2, where p2 is l0)
-    val l0 = Iterate.cached(e.select(col("u").as("node")).distinct()
+    val l0 = Stage.cached(e.select(col("u").as("node")).distinct()
       .withColumn("lab", col("node"))
       .withColumn("p1", col("node"))
       .withColumn("p2", col("node")))
     // period <= 2 iff the boundary labels equal two rounds back
     val unstable = (b: DataFrame) =>
       b.agg(count(when(col("lab") =!= col("p2"), 1))).head().getLong(0)
-    val res = Iterate.untilStable(l0, maxIters, checkEvery)(unstable)(
+    val res = Stage.untilStable(l0, maxIters, checkEvery)(unstable)(
       (_, n) => n == 0) { (cur, _) =>
       val nbr = e.join(cur.select(col("node").as("v"), col("lab")), "v")
         .select(col("u").as("node"), col("lab"),
@@ -701,16 +697,16 @@ object Graph {
           max(col("p1t")).as("p1t"))
       cnt.groupBy(col("node"))
         .agg(max(when(col("c") > 0L,
-            col("c") * lit(shift) + (lit(shift - 1) - col("lab"))))
+            col("c") * lit(LabelShift) + (lit(LabelShift - 1) - col("lab"))))
           .as("p"),
           max(when(col("own") === 1L, col("lab"))).as("old"),
           max(when(col("own") === 1L, col("p1t"))).as("p1old"))
         .select(col("node"),
-          (lit(shift - 1) - (col("p") % lit(shift))).as("lab"),
+          (lit(LabelShift - 1) - (col("p") % lit(LabelShift))).as("lab"),
           col("old").as("p1"), col("p1old").as("p2"))
     }
     val l = res.frame
-    Iterate.handOff(
+    Stage.handOff(
       l.select(col("node"), col("lab").as("community"),
           (col("lab") =!= col("p1")).cast("long").as("osc"),
           lit(res.rounds.toLong).as("rounds_run"))
@@ -725,7 +721,7 @@ object Graph {
     * the settled set: the frontier SHRINKS as the reachable set
     * saturates, so total work is O(maxHops · m) worst-case and
     * usually far less; the settled set is persisted per round
-    * ([[Iterate.untilStable]] with cached rounds) because two
+    * ([[Stage.untilStable]] with cached rounds) because two
     * consumers (anti-join + union) read it, and the frontier is a lazy
     * root of it. Fixed `maxHops` — no early-exit count per round, one
     * chunk that never tests stability — keeps the whole expansion ONE
@@ -741,11 +737,11 @@ object Graph {
               seeds: DataFrame, maxHops: Int,
               broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val e = Iterate.cached(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Stage.cached(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")))
     // Broadcast regime below the node threshold (r13, the pageRankImpl
     // pattern): the frontier and settled frames are node-bounded but
-    // RDD-rooted, so the planner SMJ'd — exchanging and sorting the
+    // rooted, so the planner SMJ'd — exchanging and sorting the
     // EDGE frame once per hop. One distinct count over the cached
     // edges gates it; past the threshold the shuffle path stands.
     // r14 (ADVICE r13): the broadcast frames hold REACHED nodes —
@@ -756,12 +752,12 @@ object Graph {
       .union(seeds.select(col("node").cast("long")))
       .distinct().count()
     val bcastNodes = nNodes <= broadcastMaxNodes
-    val dist0 = Iterate.cached(seeds.select(col("node").cast("long").as("node"))
+    val dist0 = Stage.cached(seeds.select(col("node").cast("long").as("node"))
       .distinct().withColumn("d", lit(0L)))
-    val res = Iterate.untilStable(dist0, maxHops, maxHops, cacheRounds = true)(
-        _.count())(Iterate.never) { (dist, round) =>
+    val res = Stage.untilStable(dist0, maxHops, maxHops, cacheRounds = true)(
+        _.count())(Stage.never) { (dist, round) =>
       val h = round.index
-      val frontier = Iterate.root(
+      val frontier = Stage.root(
         dist.where(col("d") === (h - 1).toLong).select(col("node")))
       val frontJ = if (bcastNodes)
         broadcast(frontier.withColumnRenamed("node", "src"))

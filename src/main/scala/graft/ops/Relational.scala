@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** The reference's classical (non-LLM) ETL operators, re-expressed as
   * declarative DataFrame transforms so Catalyst can prune/push/reorder.
@@ -250,15 +250,6 @@ object Relational {
       .groupBy(key.map(col): _*)
       .agg(combine(col("__partial")).as("agg_val"))
   }
-
-  /** Top-k by aggregate — group, sum, order, limit. The sort after the
-    * aggregation is a TakeOrderedAndProject at execution time (no full
-    * sort shuffle for small k).
-    */
-  def topKByAgg(df: DataFrame, key: Seq[String], agg: Column, k: Int): DataFrame =
-    df.groupBy(key.map(col): _*).agg(agg.as("agg_val"))
-      .orderBy(desc("agg_val"), col(key.head))
-      .limit(k)
 
   /** Persist a frame as a bucketed + in-bucket-sorted parquet table —
     * the 100 TB lever for repeated joins/aggregations on a stable key

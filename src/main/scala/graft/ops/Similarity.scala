@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** One (node, cluster=min component id) row of a bucket-local CC —
   * top-level so the UDF return type has a stable encoder.
@@ -911,10 +911,6 @@ object Similarity {
     newDf.join(intraDropped.union(crossDropped).distinct(), Seq(idCol), "left_anti")
   }
 
-  /** Hamming distance between two packed bit signatures. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Deterministic pseudo-random hyperplane weight in [-0.5, 0.5) for
     * sign-LSH: w(k, d) from an LCG over (plane, dimension) — exact
     * integer arithmetic, so any engine computes the same hyperplanes.
@@ -954,7 +950,7 @@ object Similarity {
     *
     * Cost per round: three hash-partition exchanges (neighbor join,
     * min-groupBy, jump join — all keyed on node/label). Each round's
-    * frames are cached roots ([[Iterate.untilStable]], one round per
+    * frames are cached roots ([[Stage.untilStable]], one round per
     * chunk): the self-join references the label plan twice per round,
     * so without lineage truncation the LOGICAL plan grows
     * exponentially and analysis itself hangs long before any data
@@ -978,14 +974,13 @@ object Similarity {
     * star-contraction variant for adversarial chains).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val und = edges.select(col("id_a").as("node"), col("id_b").as("nbr"))
-      .union(edges.select(col("id_b").as("node"), col("id_a").as("nbr")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = Stage.cached(
+      edges.select(col("id_a").as("node"), col("id_b").as("nbr"))
+        .union(edges.select(col("id_b").as("node"), col("id_a").as("nbr"))))
     // labels carry the output names (doc_id, cluster) from round 0, so
     // the last boundary — cached and materialized by its label-sum
     // action — IS the caller-owned result
-    val labels0 = Iterate.cached(und.groupBy(col("node"))
+    val labels0 = Stage.cached(und.groupBy(col("node"))
       .agg(least(min(col("nbr")), col("node")).as("cluster"))
       .withColumnRenamed("node", "doc_id"))
     val labelSum = (b: DataFrame) =>
@@ -993,7 +988,7 @@ object Similarity {
     // sum() over zero rows is null: an empty edge frame is already
     // converged (empty result), not an NPE. Labels only ever fall, so
     // an unchanged sum is the fixpoint.
-    val res = Iterate.untilStable(labels0, maxIter, 1, cacheRounds = true)(
+    val res = Stage.untilStable(labels0, maxIter, 1, cacheRounds = true)(
         labelSum)((prev, s) => s == null || prev.exists(_.compareTo(s) == 0),
         start = Some(labelSum(labels0))) { (labels, round) =>
       val prop = und.as("u")
@@ -1196,14 +1191,12 @@ object Similarity {
     */
   def kmeansFit(emb: DataFrame, idCol: String, embCol: String,
                 k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e = emb
+    val e = Stage.cached(emb
       .select(col(idCol).as("__id"), col(embCol).cast("array<double>").as("__emb"))
       .where(size(col("__emb")) > 0)
-      .withColumn("__nrm", vectorNorm(col("__emb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__nrm", vectorNorm(col("__emb"))))
     val w = Window.orderBy(col("__h"), col("__id"))
-    val cents0 = Iterate.cached(
+    val cents0 = Stage.cached(
       e.withColumn("__h", detHash(DetHashPrime, col("__id")))
         .orderBy(col("__h"), col("__id")).limit(k)
         .select((row_number().over(w) - 1).cast("long").as("cid"),
@@ -1213,8 +1206,8 @@ object Similarity {
     // so an unmaterialized plan doubles every iteration and analysis
     // hangs long before the spec's iters=5 would show it. Every round
     // is materialized by its own count (one round per chunk).
-    val res = Iterate.untilStable(cents0, iters, 1, cacheRounds = true)(
-        _.count())(Iterate.never, start = Some(cents0.count())) { (cents, _) =>
+    val res = Stage.untilStable(cents0, iters, 1, cacheRounds = true)(
+        _.count())(Stage.never, start = Some(cents0.count())) { (cents, _) =>
       val assigned = assignCells(e, cents, "__id")
       val means = assigned
         .select(col("cell"), posexplode(col("__emb")).as(Seq("pos", "x")))
@@ -1540,9 +1533,7 @@ object Similarity {
     // already-computed frame whose lifecycle the caller owns
     // (maxIter is retained in the signature for compatibility; the
     // bucket-local CC always reaches the fixpoint in one pass)
-    val out = comp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
+    Stage.handOff(comp)
   }
 
   /** Min-label connected components of ONE bucket's edge list —

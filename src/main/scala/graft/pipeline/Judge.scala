@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
-import graft.ops.Tuning.StagedFrame
+import graft.ops.Stage.StagedFrame
 
 /** LLM-as-a-judge operator (reference FactsMetrics,
   * apps/llm_as_a_judge/eval_with_facts.py:400-546): per row, fill a

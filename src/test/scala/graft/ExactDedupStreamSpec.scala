@@ -6,6 +6,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.ExactDedupStream
 
+/** One streamed document. Declared at top level so generated code can
+  * construct it: a case class nested in the spec needs an outer
+  * reference, which Janino cannot compile, and Spark then falls back to
+  * interpreted code.
+  */
+final case class Doc(doc_id: Long, ts: Timestamp, text: String)
+
 /** Watermark-TTL exact dedup: batch parity on the survivor set,
   * cross-batch dropping inside the horizon, and state EVICTION after
   * the watermark passes (the bounded-memory contract — a late
@@ -13,8 +20,6 @@ import graft.streaming.ExactDedupStream
   */
 class ExactDedupStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  private final case class Doc(doc_id: Long, ts: Timestamp, text: String)
 
   private def t(minute: Int) =
     Timestamp.valueOf(f"2026-01-01 10:$minute%02d:00")

@@ -1,9 +1,14 @@
 package graft
 
+import org.apache.spark.rdd.GraftRddBridge
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import graft.ops.Graph
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import graft.ops.{Graph, Stage}
 
 class GraphSpec extends SparkSpec with IterationContract {
   import spark.implicits._
@@ -100,8 +105,8 @@ class GraphSpec extends SparkSpec with IterationContract {
     val edges = (for {
       b <- 0L until 20L; i <- 0L until 8L; j <- (i + 1) until 8L
     } yield (b * 6 + i, b * 6 + j)).toDF("src", "dst")
-    val counting = Inspect.executed(spark)((action, _) => action == "head")(
-      Graph.triangleCount(edges, "src", "dst"))
+    val counting = Inspect.executions(spark)((action, _) => action == "head")(
+      Graph.triangleCount(edges, "src", "dst")).head
     // the counting job's own operators, through its adaptive stages but
     // not into the cached frames it scans
     object Aqe extends AdaptiveSparkPlanHelper
@@ -396,10 +401,70 @@ class GraphSpec extends SparkSpec with IterationContract {
     assert(byRegime.forall(_ == expected), s"$byRegime")
   }
 
+  test("labelPropagation: a round's neighbor join adds no exchange on " +
+    "the edge side") {
+    // shuffled regime, as at scale: no broadcast hides the edge side
+    val edges = (1L to 600L).map(i => (i, (i * 7) % 211 + 1)).toDF("src", "dst")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val e = Graph.labelEdges(edges, "src", "dst")
+    val round = try Inspect.executions(spark)((action, _) => action == "collect") {
+        val l0 = Stage.root(e.select(col("u").as("node")).distinct()
+          .withColumn("lab", col("node")))
+        Graph.labelRound(e)(l0).collect()
+      }.head finally { spark.conf.set(key, was); e.unpersist() }
+    // the edge frame is the one cache a round reads
+    object Aqe extends AdaptiveSparkPlanHelper
+    val plan = round.executedPlan
+    def readsEdges(p: SparkPlan) =
+      Aqe.collect(p) { case t: InMemoryTableScanExec => t }.nonEmpty
+    val edgeSides = Aqe.collect(plan) {
+      case j: SortMergeJoinExec => j.children.filter(readsEdges)
+    }.flatten
+    assert(edgeSides.size == 1, plan.treeString)
+    val exchanges = edgeSides.flatMap(Aqe.collect(_) { case x: ShuffleExchangeLike => x })
+    assert(exchanges.isEmpty, plan.treeString)
+  }
+
+  test("reliable mode: graph queries read no local checkpoint, same results") {
+    object Aqe extends AdaptiveSparkPlanHelper
+    def localLeaves(p: SparkPlan): Seq[SparkPlan] = Aqe.collectWithSubqueries(p) {
+      case t: InMemoryTableScanExec => localLeaves(t.relation.cachedPlan)
+      case s: RDDScanExec if GraftRddBridge.readsLocalCheckpoint(s.rdd) => Seq(s)
+    }.flatten
+    // per query: its rows, and the local-checkpoint leaves of every plan
+    // that ran, builder jobs included
+    def run(name: String): (Seq[Row], Int) = {
+      var rows = Seq.empty[Row]
+      val plans = Inspect.executions(spark)((_, _) => true) {
+        rows = SparkEntry.queries(name)(spark, sfDir).collect().toSeq
+      }
+      spark.catalog.clearCache()
+      (rows, plans.map(qe => localLeaves(qe.executedPlan).size).sum)
+    }
+    // graph_ppr_parts stages its edges with stageCheckpoint: with the
+    // key off it must show a local leaf, or the walk finds nothing
+    val names = Seq("graph_pagerank_parts", "graph_triangles_parts",
+      "graph_ppr_parts")
+    val local = names.map(run)
+    assert(local.last._2 > 0, "no local checkpoint seen with the key off")
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft_ckpt_").toString)
+    spark.conf.set("spark.graft.reliableCheckpoint", "true")
+    val reliable = try names.map(run)
+      finally spark.conf.set("spark.graft.reliableCheckpoint", "false")
+    names.zip(reliable).foreach { case (name, (_, leaves)) =>
+      assert(leaves == 0, s"$name read $leaves local checkpoint(s)")
+    }
+    assert(reliable.map(_._1) == local.map(_._1))
+    assert(local.forall(_._1.nonEmpty))
+  }
+
   // Iteration-helper contract on one small fixed graph: two triangles
   // bridged by 3-4 plus a tail 6-7-8. Each ceiling is the most jobs the
   // operator started in 15 runs before the loops moved onto
-  // ops.Iterate (kCore ranged 66-70 there, corenessDecomposition
+  // ops.Stage (kCore ranged 66-70 there, corenessDecomposition
   // 96-102). The two converged/coreness ceilings sit strictly below
   // every such run: their separate stability probes are gone.
   private def contractEdges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
-/** The hand-off contract of the iterative operators (ops.Iterate): the
+/** The hand-off contract of the iterative operators (ops.Stage): the
   * returned frame is the only cache an operator leaves behind, and the
   * number of Spark jobs one call starts stays under a pinned ceiling.
   */

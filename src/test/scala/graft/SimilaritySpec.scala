@@ -661,7 +661,7 @@ class SimilaritySpec extends SparkSpec with IterationContract {
   }
 
   // Iteration-helper contract (see GraphSpec): each ceiling is the job
-  // count the operator started before its loop moved onto ops.Iterate.
+  // count the operator started before its loop moved onto ops.Stage.
   // connectedComponents' 23 then did not include materializing the
   // returned frame: freeing the last label frame dropped its cache.
   test("iteration contract: connectedComponents caches only its result " +
