@@ -1499,22 +1499,7 @@ object AdvancedQueries {
       (s, dir) => {
         import org.apache.spark.sql.types.DecimalType
         val e = repeatCoPurchaseEdges(s, dir).stageCheckpoint(true)
-        val und = e.select(col("src").as("n"), col("dst").as("nb"))
-          .union(e.select(col("dst"), col("src")))
-        val deg = und.groupBy(col("n")).agg(count(lit(1)).as("d"))
-        val centers = deg.where(col("d") >= 2 && col("d") <= AaMaxCenterDegree)
-          .select(col("n").as("cz"))
-        // cap applied STRUCTURALLY before the self-join (r12 hub
-        // stress: Catalyst did NOT push a post-self-join centers
-        // filter below the join, so a 10⁵-degree hub enumerated its
-        // full deg² wedges before being dropped — filter the
-        // adjacency to capped centers FIRST, then wedge)
-        val cund = und.join(centers, col("n") === col("cz"))
-          .select(col("n"), col("nb"))
-        val wedges = cund.as("l")
-          .join(cund.as("r"),
-            col("l.n") === col("r.n") && col("l.nb") < col("r.nb"))
-          .select(col("l.nb").as("a"), col("r.nb").as("b"))
+        val (deg, wedges) = cappedWedges(e)
         val common = wedges.groupBy(col("a"), col("b"))
           .agg(count(lit(1)).as("n_common"))
         common
@@ -1575,27 +1560,11 @@ object AdvancedQueries {
       (s, dir) => {
         import org.apache.spark.sql.types.DecimalType
         val e = repeatCoPurchaseEdges(s, dir).stageCheckpoint(true)
-        val und = e.select(col("src").as("n"), col("dst").as("nb"))
-          .union(e.select(col("dst"), col("src")))
-        val deg = und.groupBy(col("n")).agg(count(lit(1)).as("d"))
-        // d >= 2: degree-1 nodes center no wedge, and ln(1) = 0
-        // would trip the ANSI division before the join drops them
-        val wz = deg.where(col("d") >= 2 && col("d") <= AaMaxCenterDegree)
-          .select(col("n").as("cz"),
-            round((lit(1.0) / log(col("d").cast("double")))
-              .cast(DecimalType(18, 8)), 6).cast(DecimalType(18, 6))
-              .as("wz"))
-        // cap applied STRUCTURALLY before the self-join — same r12
-        // hub-stress finding as graph_jaccard_links: the weight join
-        // doubles as the center filter, so it must sit BELOW the
-        // wedge self-join, not above it where a hub's deg² pairs
-        // materialize first
-        val lw = und.join(wz, col("n") === col("cz"))
-          .select(col("n"), col("nb"), col("wz"))
-        val wedges = lw.as("l")
-          .join(lw.as("r"),
-            col("l.n") === col("r.n") && col("l.nb") < col("r.nb"))
-          .select(col("l.nb").as("a"), col("r.nb").as("b"), col("l.wz").as("wz"))
+        // centers have d >= 2, so ln(d) > 0 and the weight never
+        // divides by zero
+        val (_, wedges) = cappedWedges(e, "wz" ->
+          round((lit(1.0) / log(col("d").cast("double")))
+            .cast(DecimalType(18, 8)), 6).cast(DecimalType(18, 6)))
         val aa = wedges.groupBy(col("a"), col("b"))
           .agg(count(lit(1)).as("n_common"), sum(col("wz")).as("aa"))
         aa.join(e, aa("a") === e("src") && aa("b") === e("dst"),
@@ -1803,6 +1772,34 @@ object AdvancedQueries {
     * agree. 256 keeps every center of the test graphs.
     */
   private val AaMaxCenterDegree = 256
+
+  /** The wedge core of graph_jaccard_links and graph_adamic_adar over an
+    * edge list (src, dst): every node's degree (n, d), and one
+    * (a, b, carried...) row per wedge a–z–b (a < b) through a center z
+    * of degree 2..[[AaMaxCenterDegree]]. `carry` are per-center columns
+    * computed from (n, d), carried onto each wedge. The cap is applied
+    * STRUCTURALLY before the self-join: Catalyst does not push a
+    * post-join center filter below the join, so a hub would enumerate
+    * its deg² wedges before being dropped. Wedge rows are therefore
+    * bounded by Σ d² over capped centers (JaccardLinksSpec pins it on a
+    * hub graph).
+    */
+  private[graft] def cappedWedges(e: org.apache.spark.sql.DataFrame,
+                                  carry: (String, org.apache.spark.sql.Column)*)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val und = e.select(col("src").as("n"), col("dst").as("nb"))
+      .union(e.select(col("dst"), col("src")))
+    val deg = und.groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val centers = deg.where(col("d") >= 2 && col("d") <= AaMaxCenterDegree)
+      .select(col("n").as("cz") +: carry.map { case (n, c) => c.as(n) }: _*)
+    val lc = und.join(centers, col("n") === col("cz"))
+      .select(Seq(col("n"), col("nb")) ++ carry.map(c => col(c._1)): _*)
+    val wedges = lc.as("l")
+      .join(lc.as("r"), col("l.n") === col("r.n") && col("l.nb") < col("r.nb"))
+      .select(Seq(col("l.nb").as("a"), col("r.nb").as("b")) ++
+        carry.map(c => col(s"l.${c._1}").as(c._1)): _*)
+    (deg, wedges)
+  }
 
   private val PageRankIters = 5
   // graph_pagerank_converged: 12-round cap, exit when the per-round

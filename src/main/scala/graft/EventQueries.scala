@@ -747,8 +747,7 @@ object EventQueries {
     // timeline to the driver is exactly the 100 TB failure mode. The
     // merge form shuffles each side at its own width instead of the
     // union-timeline's padded rows (the window form measured 3.1× its
-    // oracle at sf0.1; the native merge on the same contract is ~7×
-    // cheaper at 50M rows in StressBench).
+    // oracle at sf0.1).
     QueryDef("events_resample_ffill",
       (s, dir) => {
         val e = Tables.load(s, dir, "events")

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local-session builder for every dev entry point (Verify, Bench,
-  * StressBench, Inspect) so the tuning knobs cannot drift between the
-  * tools whose numbers SCALING.md compares:
+/** One local-session builder for every entry point (Verify, Bench,
+  * Inspect) so the tuning knobs cannot drift between the tools whose
+  * numbers SCALING.md compares:
   *  - SPARK_GRAFT_CPUS threads (callers pass their default);
   *  - shuffle partitions sized to the thread count;
   *  - small-SF scan splitting (default openCost keeps a sub-MB

@@ -25,13 +25,13 @@ object SimilarityQueries {
   // fixed-SIZE distortion-audit sample: pair work is ≤ K²/2 at ANY
   // corpus size (a fractional sample's pair stage grows quadratically
   // with the corpus — the one latent quadratic VERDICT r10 flagged)
-  private val JlAuditK = 128
+  private[graft] val JlAuditK = 128
 
   /** The embedding_jl_distortion pipeline on an arbitrary
-    * (vec_id, emb: array<double>) frame — shared by the gated query
-    * and the StressBench amortization row (which feeds it N shifted
-    * copies of the corpus to prove the audit cost is FLAT in corpus
-    * size: the only corpus-linear work is the top-K scan).
+    * (vec_id, emb: array<double>) frame. Its audit cost is flat in
+    * corpus size: the only corpus-linear work is the top-K scan, and
+    * EmbeddingJlSpec pins both pair stages at K(K−1)/2 rows on the
+    * corpus and on 4 shifted copies of it.
     */
   private[graft] def jlDistortion(s: org.apache.spark.sql.SparkSession,
                                   vecs: org.apache.spark.sql.DataFrame)

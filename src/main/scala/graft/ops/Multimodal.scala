@@ -68,7 +68,8 @@ object Multimodal {
   /** Feature-extraction operator: binary payload column → (n_bytes,
     * digest, features). Runs per-partition so a real decoder can batch
     * (model inference wants batched input; the iterator shape here is
-    * exactly what a vectorized bridge consumes).
+    * exactly what a vectorized bridge consumes). A NULL payload gives
+    * NULL in all three columns, as SQL's octet_length and sha256 do.
     */
   def extractFeatures(df: DataFrame, bytesCol: String): DataFrame = {
     val schema = df.schema
@@ -78,9 +79,11 @@ object Multimodal {
       .add("features", ArrayType(DoubleType))
     df.mapPartitions { it: Iterator[Row] =>
       it.map { row =>
-        val bytes = row.getAs[Array[Byte]](idx)
-        val (digest, feats) = decodeStub(bytes)
-        Row.fromSeq(row.toSeq :+ bytes.length.toLong :+ digest :+ feats.toSeq)
+        val derived = Option(row.getAs[Array[Byte]](idx)).map { bytes =>
+          val (digest, feats) = decodeStub(bytes)
+          Seq(bytes.length.toLong, digest, feats.toSeq)
+        }.getOrElse(Seq(null, null, null))
+        Row.fromSeq(row.toSeq ++ derived)
       }
     }(Encoders.row(outSchema))
   }

@@ -185,8 +185,9 @@ object Similarity {
     * are dropped either way — but an adversarial hot bucket (a
     * boilerplate shingle shared by 100M docs, an empty-text length
     * band) never materializes its id set in one aggregation buffer.
-    * Two interchangeable strategies, chosen per call site by what was
-    * measured (SCALING.md "hot-bucket prefilter"):
+    * Two interchangeable strategies, chosen per call site by the cost
+    * of `df`'s lineage; SimilaritySpec's collectSetCapped test pins
+    * both guards (SCALING.md "Scaling guards"):
     *
     *  - `twoPass = false` (default): ONE pass through `df` with the
     *    size-capped native aggregate [[graft.functions.GraftFunctions
@@ -196,12 +197,12 @@ object Similarity {
     *    is expensive (e.g. 64-permutation MinHash signatures).
     *  - `twoPass = true`: (1) count rows per bucket — O(1) state,
     *    (2) left-semi join to buckets with count in [2, cap],
-    *    (3) collect_set only on survivors. Costs a second evaluation
-    *    of `df`'s lineage + an extra shuffle, but prunes hot buckets'
-    *    rows BEFORE the set shuffle — measured faster when hot
-    *    buckets carry a large share of the rows and the lineage is
-    *    cheap (the shingle inverted indexes on a duplication-stressed
-    *    corpus).
+    *    (3) collect_set only on survivors: no row of a hot bucket
+    *    reaches the set aggregate. Costs a second evaluation of
+    *    `df`'s lineage + an extra shuffle, but prunes hot buckets'
+    *    rows BEFORE the set shuffle — the choice when hot buckets
+    *    carry a large share of the rows and the lineage is cheap
+    *    (the winnow fingerprint index).
     *
     * REQUIRES (keyCols..., idCol) rows to be distinct — every call
     * site here satisfies this by construction (one row per doc per

@@ -21,8 +21,8 @@ import graft.expressions.KmvDistinct
   * Why at 100 TB: exact distinct either expands every row per distinct
   * aggregate or shuffles the raw keys — the exchange payload is
   * O(groups × distinct keys). The sketch's partial state is ≤ k longs
-  * per (group, partition) regardless of cardinality (SCALING.md's
-  * StressBench row measured the payload ratio at 200× on 50M rows),
+  * per (group, partition) regardless of cardinality (SketchSpec pins
+  * the shuffle at ≤ groups × map partitions records of ≤ k hashes),
   * with error ~1/√(k−2) and EXACT counts below k distinct values.
   *
   * Scope and safety:

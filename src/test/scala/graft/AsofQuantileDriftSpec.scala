@@ -1,12 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import graft.ops.{Drift, Quantile, Relational}
 
 /** Round-6 operators: asofJoin, exact quantile bracketing,
   * prioritySample, PSI drift report.
   */
-class AsofQuantileDriftSpec extends SparkSpec {
+class AsofQuantileDriftSpec extends SparkSpec with IterationContract {
   import spark.implicits._
 
   // ---- asofJoin -----------------------------------------------------
@@ -385,5 +389,38 @@ class AsofQuantileDriftSpec extends SparkSpec {
     val b = Quantile.robustOutliers(df.repartition(29), "g", "v", 5.1891)
       .collect().toSeq
     assert(a == b && a.size == 3)
+  }
+
+  test("quantile family: one stage reads the raw rows, every later pass " +
+    "reads the distinct (group, value) frame") {
+    // 4,000 rows over 8 groups × 101 values, on a named RDD: a stage
+    // whose lineage holds that RDD is a pass over the raw rows
+    val raw = spark.sparkContext.parallelize(0 until 4000, 4)
+      .map(i => Row((i % 8).toLong, (i * 37 % 101).toDouble, (i % 7 + 1).toDouble))
+      .setName("quantile raw rows")
+    val df = spark.createDataFrame(raw, new StructType()
+      .add("g", LongType).add("v", DoubleType).add("w", DoubleType))
+    def rawPasses(out: => DataFrame): Int = {
+      val passes = new AtomicInteger
+      val listener = new SparkListener {
+        override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+          if (s.stageInfo.rddInfos.exists(_.name == raw.name)) passes.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      // jobsStarted's closing fence delivers every event of the run
+      try jobsStarted(out.write.format("noop").mode("overwrite").save())
+      finally spark.sparkContext.removeSparkListener(listener)
+      passes.get
+    }
+    Seq[(String, () => DataFrame)](
+      "winsorizedStats" -> (() => Quantile.winsorizedStats(df, "g", "v", 0.05, 0.95)),
+      "robustOutliers" -> (() => Quantile.robustOutliers(df, "g", "v", 5.1891)),
+      "groupQuantiles" -> (() => Quantile.groupQuantiles(df, "g", "v",
+        Seq("p50" -> 0.5, "p95" -> 0.95, "p99" -> 0.99))),
+      "groupWeightedQuantile" -> (() =>
+        Quantile.groupWeightedQuantile(df, "g", "v", "w", 0.5))
+    ).foreach { case (name, op) =>
+      assert(rawPasses(op()) == 1, s"$name read the raw rows more than once")
+    }
   }
 }

@@ -48,6 +48,22 @@ class ImageDecodeSpec extends SparkSpec {
     assert(out(2L) == ((false, -1L)), "garbage must not fail the scan")
   }
 
+  test("extractFeatures: a NULL payload gives NULL n_bytes, digest and features") {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", org.apache.spark.sql.types.LongType)
+      .add("payload", org.apache.spark.sql.types.BinaryType)
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(Row(1L, "abc".getBytes), Row(2L, null)), schema)
+    val out = Multimodal.extractFeatures(df, "payload")
+      .select(col("id"), col("n_bytes"), col("digest"), col("features"))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out(1L).getLong(1) == 3L)
+    assert(out(1L).getString(2) ==
+      "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+    assert(out(1L).getSeq[Double](3).length == Multimodal.FeatureDim)
+    assert((1 to 3).forall(out(2L).isNullAt), out(2L).toString)
+  }
+
   test("dHash: identical images collide, perturbations stay near, distinct gradients differ") {
     def grad(a: Int, b: Int, c: Int, noise: Int = 0) =
       Multimodal.encodeGrayPng(18, 16, (x, y) =>

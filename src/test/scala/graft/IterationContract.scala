@@ -48,6 +48,21 @@ trait IterationContract { self: SparkSpec =>
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Checks that `a` and `b` start the same number of Spark jobs and
+    * returns it. AQE jitter is absorbed as in [[iterationContract]]:
+    * while the counts differ, both sides are re-measured up to `tries`
+    * times in all and each keeps its fewest.
+    */
+  def sameJobs(a: => Any, b: => Any, tries: Int = 3): Int = {
+    var (ja, jb) = (jobsStarted(a)._2, jobsStarted(b)._2)
+    for (_ <- 2 to tries if ja != jb) {
+      ja = math.min(ja, jobsStarted(a)._2)
+      jb = math.min(jb, jobsStarted(b)._2)
+    }
+    assert(ja == jb, s"$ja jobs vs $jb")
+    ja
+  }
+
   /** Runs `op`, checks that the only persistent RDD it leaves is the
     * returned frame's cache (then unpersists it), and that it started
     * at most `maxJobs` Spark jobs. AQE submits query stages as their

@@ -2,7 +2,8 @@ package graft
 
 /** graph_jaccard_links invariants on the corpus: scores are valid
   * Jaccards, predictions are non-edges, and the overlap never exceeds
-  * either endpoint's degree.
+  * either endpoint's degree. The wedge core it shares with
+  * graph_adamic_adar drops hub centers.
   */
 class JaccardLinksSpec extends SparkSpec {
   import spark.implicits._
@@ -46,5 +47,16 @@ class JaccardLinksSpec extends SparkSpec {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(math.abs(j - want) < 1e-9, s"jaccard $j != $want for ($a, $b)")
     }
+  }
+
+  test("a hub above the center cap centers no wedge; wedges grow linearly in spokes") {
+    import org.apache.spark.sql.functions._
+    // hub 0 fans out to h spokes that also form a ring: each spoke has
+    // degree 3 and centers 3 wedges, the hub (degree h > 256) centers
+    // none — uncapped it would center h(h−1)/2
+    def hub(h: Long) = spark.range(1, h + 1).select(lit(0L).as("src"), col("id").as("dst"))
+      .union(spark.range(1, h + 1).select(col("id").as("src"), (col("id") % h + 1).as("dst")))
+    for (h <- Seq(300L, 600L))
+      assert(AdvancedQueries.cappedWedges(hub(h))._2.count() == 3 * h, s"hub of $h spokes")
   }
 }

@@ -231,4 +231,20 @@ class RelationalSpec extends SparkSpec {
     val totalOrders = rows.map(_._4).sum
     assert(totalOrders == Tables.load(spark, sfDir, "orders").count())
   }
+
+  test("bootstrapMeans aggregates replicates map-side: shuffle records " +
+    "≤ map partitions × groups × reps, the same at ×1 and ×4") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (parts, groups, reps) = (4, 8, 16L)
+    val x1 = spark.range(0, 2000, 1, parts).select((col("id") % groups).as("g"),
+      col("id"), (col("id") % 97).cast("decimal(18,6)").as("v"))
+    def records(df: org.apache.spark.sql.DataFrame) =
+      executedOps(Relational.bootstrapMeans(df, "g", "v", "id", reps, 1000000L,
+        Seq(367879L, 735758L, 919698L, 981011L, 996340L)))
+        .collect { case e: ShuffleExchangeExec =>
+          e.metrics("shuffleRecordsWritten").value }.sum
+    val r1 = records(x1)
+    assert(r1 > 0 && r1 <= parts * groups * reps, s"$r1 records")
+    assert(records(duplicated(x1, 4, "id").coalesce(parts)) == r1)
+  }
 }

@@ -46,6 +46,19 @@ class RewardSpec extends SparkSpec {
     val n = data.groupBy(_._1).map { case (g, rs) => g -> rs.size }
     for (a <- n.keys; b <- n.keys if a != b)
       assert(wins((a, b)) + wins((b, a)) == n(a) * n(b).toDouble)
+    // the same rows ×4: every comparison count grows 16×, while each
+    // join runs over (value, group) counts — bounded by V·G², not n
+    val x1 = data.toDF("g", "r")
+    val x4 = duplicated(x1, 4)
+    def joinRows(df: org.apache.spark.sql.DataFrame) =
+      executedOps(Reward.pairwiseWins(df, "g", "r")).collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+          j.metrics("numOutputRows").value }.sorted
+    assert(joinRows(x1) == joinRows(x4))
+    val wins4 = Reward.pairwiseWins(x4, "g", "r")
+      .as[(String, String, Double)].collect()
+      .map { case (a, b, w) => (a, b) -> w }.toMap
+    assert(wins4 == wins.map { case (p, w) => p -> 16 * w })
   }
 
   test("Bradley-Terry recovers planted dominance and sums to one") {

@@ -1,7 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Partial}
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import org.apache.spark.sql.types.LongType
+import graft.expressions.CollectSetCapped
+import graft.ops.{Similarity, Text}
 
 /** Ports the reference's inline LSH test (etl_slimpajama_dc_proc.py:
   * 88-100: a known near-duplicate sentence pair must collide) plus
@@ -59,6 +67,50 @@ class SimilaritySpec extends SparkSpec with IterationContract {
     assert(Set(0L, 2L).subsetOf(kept), s"$kept")
     assert(graft.streaming.MinHashLocal.buckets(
       Array.fill(112)(Int.MaxValue.toLong - 1), 16, 7).forall(_._2 > 0))
+  }
+
+  test("LSH family under 4-way duplication: the same jobs at ×1 and ×4, " +
+    "pair stages within buckets × cap²") {
+    val base = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val x4 = duplicated(base, 4, "doc_id")
+    def sig(d: DataFrame) = Similarity.minhashSignatures(d, "doc_id", "text", 64, 5)
+    def pairOps(cap: Int): Seq[(String, DataFrame => DataFrame)] = Seq(
+      "lshCandidatePairs" -> (d => Similarity.lshCandidatePairs(sig(d), "doc_id", 16, 4, cap)),
+      "jaccardPairs" -> (d => Similarity.jaccardPairs(d, "doc_id", "text", 5, 0.5, cap)),
+      "lshVerifiedPairs" -> (d =>
+        Similarity.lshVerifiedPairs(d, "doc_id", "text", 0.5, 64, 5, 16, 4, cap)))
+    def components(d: DataFrame): Long = {
+      val cc = Similarity.connectedComponents(
+        Similarity.lshCandidatePairs(sig(d), "doc_id", 16, 4))
+      try cc.count() finally cc.unpersist()
+    }
+    // duplication multiplies every bucket, not the number of passes
+    val family = ("minhashDedup" -> ((d: DataFrame) =>
+      Similarity.minhashDedup(d, "doc_id", "text"))) +: pairOps(1000)
+    family.foreach { case (name, op) =>
+      info(s"$name: ${sameJobs(op(base).count(), op(x4).count())} jobs")
+    }
+    info(s"connectedComponents: ${sameJobs(components(base), components(x4))} jobs")
+    // a cap of 3 below the 4-way clusters makes every duplicated bucket
+    // hot: each pair stage emits at most cap(cap−1)/2 pairs per bucket.
+    // A stage that emits nothing stays in the final plan only if AQE
+    // does not prune it as an empty relation.
+    val cap = 3
+    val noPrune = "spark.sql.adaptive.optimizer.excludedRules"
+    spark.conf.set(noPrune,
+      "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+    try for ((name, op) <- pairOps(cap); (d, k) <- Seq(base -> 1, x4 -> 4)) {
+      val stages = executedOps(op(d)).collect {
+        case g: GenerateExec if g.generatorOutput.exists(_.name == "__p") => g }
+      assert(stages.nonEmpty, s"$name ×$k: no pair stage")
+      stages.foreach { g =>
+        val buckets = below(g.child) { case a: BaseAggregateExec =>
+          a.metrics("numOutputRows").value }.get
+        val pairs = g.metrics("numOutputRows").value
+        assert(pairs <= buckets * cap * (cap - 1) / 2,
+          s"$name ×$k: $pairs pairs from $buckets buckets")
+      }
+    } finally spark.conf.unset(noPrune)
   }
 
   test("jaccardPairs computes the exact jaccard for a known pair") {
@@ -264,6 +316,9 @@ class SimilaritySpec extends SparkSpec with IterationContract {
       if la == "cold" || bkt(ia) == bkt(ib)
     } yield (ia, ib)).toSet
 
+    // minCos = −1 keeps every pair the self-join examined: the hot
+    // label's sub-blocks bound them by n·maxBlockSize
+    assert(got.size <= (hot.size + cold.size) * cap, s"${got.size} pairs examined")
     assert(got == want)
     // the guard must actually bite: some same-label hot pair is dropped
     val allHot = (for ((ia, _, _) <- hot; (ib, _, _) <- hot if ia < ib) yield (ia, ib)).toSet
@@ -476,17 +531,51 @@ class SimilaritySpec extends SparkSpec with IterationContract {
     assert(out(0L).contains(Seq(0L, 1L, 2L)))   // sorted, deduped
     assert(out(1L).isEmpty)                      // overflow → null
     assert(out(2L).contains(Seq(42L)))
-    // strategy equivalence on real data: one-pass capped agg ==
-    // two-pass count/semi-join/collect_set, bit for bit
-    val d = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), (col("n_chars") % 37).as("k"))
-    val onePass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", 50, "ids")
-      .orderBy("k").collect()
-    val twoPass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", 50, "ids",
+    // the buffer itself, no Spark job: cap+1 distinct ids leave an empty,
+    // overflowed set; merging with it stays overflowed; serialized, it is
+    // 5 bytes however many ids arrive
+    val agg = CollectSetCapped(BoundReference(0, LongType, nullable = true), 4)
+    def buffer(ids: Seq[Long]) = ids.foldLeft(agg.createAggregationBuffer())(
+      (b, id) => agg.update(b, InternalRow(id)))
+    val hot = buffer(0L to 4L)
+    assert(hot.overflowed && hot.set.isEmpty)
+    assert(agg.merge(buffer(Seq(7L)), hot).overflowed)
+    assert(agg.merge(hot, buffer(Seq(7L))).set.isEmpty)
+    assert(Seq(5L, 50L, 5000L).map(n => agg.serialize(buffer(0L until n)).length)
+      .distinct == Seq(5))
+    // one-pass capped agg == two-pass count/semi-join/collect_set, bit
+    // for bit, and the two-pass prefilter feeds collect_set only the
+    // rows of buckets with 2..cap ids. Inputs: a length band of the
+    // corpus; one 500-id hot bucket beside 100 two-id buckets; the
+    // winnow fingerprints of the corpus ×4 (dedup_winnow_pairs' index),
+    // where a cap of 8 makes every fingerprint of base df ≥ 3 hot
+    val docs = Tables.load(spark, sfDir, "documents")
+    val hotBucket = spark.range(500).select(lit(0L).as("k"), col("id").as("doc_id"))
+      .union(spark.range(200).select((floor(col("id") / 2) + 1).cast("long").as("k"),
+        (col("id") + 1000L).as("doc_id")))
+    val fingerprints = duplicated(docs.select("doc_id", "text"), 4, "doc_id")
+      .select(col("doc_id"), explode(Text.winnowHashes(col("text"), 4, 8)).as("k"))
+    for ((d, cap, adversarial) <- Seq(
+        (docs.select(col("doc_id"), (col("n_chars") % 37).as("k")), 50, false),
+        (hotBucket, 50, true), (fingerprints, 8, true))) {
+      val sizes = d.groupBy("k").count()
+      val fedWant = sizes.where(col("count").between(2, cap)).agg(sum("count"))
+        .head.getLong(0)
+      val onePass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", cap, "ids")
+        .orderBy("k").collect()
+      val twoPass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", cap, "ids",
         twoPass = true)
-      .orderBy("k").collect()
-    assert(onePass.sameElements(twoPass))
-    assert(onePass.nonEmpty)
+      assert(onePass.sameElements(twoPass.orderBy("k").collect()))
+      assert(onePass.nonEmpty)
+      val fed = executedOps(twoPass).collect {
+        case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+            e.mode == Partial && e.aggregateFunction.isInstanceOf[CollectSet]) =>
+          below(a.child) { case p if p.metrics.contains("numOutputRows") =>
+            p.metrics("numOutputRows").value }.get
+      }
+      assert(fed == Seq(fedWant), s"rows into collect_set: $fed, want $fedWant")
+      if (adversarial) assert(sizes.where(col("count") > cap).count() > 0, "no hot bucket")
+    }
   }
 
   test("collectSetCapped survives the sort-based aggregation fallback") {

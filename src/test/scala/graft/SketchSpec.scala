@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -34,6 +35,30 @@ class SketchSpec extends SparkSpec {
         .agg(GraftFunctions.kmvDistinct(col("v"), 64).as("d"))
         .as[Long].head()
     assert(run(1) == run(13))
+  }
+
+  test("approx distinct shuffles ≤ groups × map partitions sketches of ≤ k hashes") {
+    // 4 groups × 4 map partitions, ~500 distinct values per (group,
+    // partition): exact distinct would shuffle every (group, value).
+    // v is not the range column, whose partitioning would already
+    // cluster (g, v) and spare the exact form its exchange
+    val (groups, parts, k) = (4, 4, 64)
+    val df = spark.range(0, 8000, 1, parts)
+      .select((col("id") % groups).as("g"), (col("id") * 7919 % 4000).as("v"))
+    spark.conf.set("spark.graft.approxDistinct", "true")
+    spark.conf.set("spark.graft.approxDistinctK", k.toString)
+    try {
+      val shuffles = executedOps(df.groupBy("g").agg(countDistinct(col("v"))))
+        .collect { case e: ShuffleExchangeExec => e }
+      val records = shuffles.map(_.metrics("shuffleRecordsWritten").value).sum
+      val bytes = shuffles.map(_.metrics("dataSize").value).sum
+      assert(records > 0 && records <= groups * parts, s"$records records")
+      // a record is the group key, row overhead and ≤ k 8-byte hashes
+      assert(bytes <= records * (8L * k + 64), s"$bytes bytes in $records records")
+    } finally {
+      spark.conf.set("spark.graft.approxDistinct", "false")
+      spark.conf.unset("spark.graft.approxDistinctK")
+    }
   }
 
   test("kmv_distinct is callable from SQL via extensions") {

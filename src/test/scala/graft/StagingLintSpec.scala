@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Lineage cuts, caches and hand-offs live in one module, ops/Stage:
   * no other main source persists, checkpoints or re-roots a frame on
-  * its RDD, and only Stage reads the reliable-checkpoint key. A plain
-  * scan of the sources with comments stripped; no Spark session.
+  * its RDD, and only Stage reads the reliable-checkpoint key. The
+  * program's entry points and the environment keys it reads are pinned
+  * lists. A plain scan of the sources with comments stripped; no Spark
+  * session.
   */
 class StagingLintSpec extends AnyFunSuite {
 
@@ -84,5 +86,23 @@ class StagingLintSpec extends AnyFunSuite {
     val uses = mainSources.map(f => f -> "spark.graft.reliableCheckpoint"
       .r.findAllIn(code(f)).size).filter(_._2 > 0)
     assert(uses == Seq(StageFile -> 1), uses.toString)
+  }
+
+  test("entry points and environment keys are pinned lists") {
+    val files = mainSources.map(f => f -> code(f))
+    val mains = files.collect { case (f, src) if src.contains("def main(") =>
+      f.getFileName.toString.stripSuffix(".scala") }.toSet
+    assert(mains == Set("Bench", "Verify", "FuzzGen", "Inspect"), mains.toString)
+    val envRead = raw"""(?:sys\.env|System\.getenv)[.\w]*(?:\(\s*"(\w+)")?""".r
+    val keys = files.flatMap { case (_, src) =>
+      envRead.findAllMatchIn(src).map(m => Option(m.group(1))) }
+    assert(!keys.contains(None), "an environment read whose key is not a literal")
+    assert(keys.flatten.toSet == Set("SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_BENCH_ONLY",
+      "SPARK_GRAFT_BENCH_HEAVY_EXTRA", "SPARK_GRAFT_BENCH_ORACLE",
+      "SPARK_GRAFT_BENCH_NO_LOCAL", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_HASH_MODE", "SPARK_GRAFT_VERIFY_ONLY", "FUZZ_NULLS"),
+      keys.flatten.distinct.sorted.mkString(", "))
   }
 }
