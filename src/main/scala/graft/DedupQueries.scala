@@ -15,8 +15,6 @@ import graft.ops.Stage.StagedFrame
   */
 object DedupQueries {
 
-  import Similarity.{MersennePrime31 => P, Base30Mod => B30}
-
   private val NumPerms = 64
 
   /** pipe_cluster_summaries: the per-representative summarize
@@ -226,9 +224,6 @@ object DedupQueries {
   private val EditBandChars = 64
   private val EditMaxDist = 40
 
-  /** DuckDB mirror of md5Long. */
-  private def md5LongSql(x: String) = s"('0x' || substring(md5($x), 1, 15))::BIGINT"
-
   /** PageRank iterations for cluster_rank_representatives. */
   private val PrIters = 4
 
@@ -281,7 +276,7 @@ object DedupQueries {
     */
   private def lshBandsSqlFrom(src: String): String = {
     val mins = (0 until NumPerms)
-      .map(i => s"min((b * ${2L * i + 1} + ${7919L * i + 12345L}) % $P) AS m$i")
+      .map(i => s"min(${permSql(i, "b")}) AS m$i")
       .mkString(",\n    ")
     val bandSelects = (0 until Bands).map { j =>
       val bv = (0 until Rows).map(r => s"m${j * Rows + r}")
@@ -297,7 +292,7 @@ object DedupQueries {
     // barrier the whole query is seconds)
     s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM $src),
        |sh AS (SELECT doc_id, unnest($shinglesSql) AS s FROM w),
-       |hb AS (SELECT doc_id, ${md5LongSql("s")} % $B30 AS b FROM sh),
+       |hb AS (SELECT doc_id, ${md5LongSql("s")} % $Base30Mod AS b FROM sh),
        |sig AS MATERIALIZED (SELECT doc_id,
        |    $mins
        |  FROM hb GROUP BY doc_id),

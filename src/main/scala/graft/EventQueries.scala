@@ -1922,14 +1922,11 @@ object EventQueries {
       },
       Some {
         def point(w: Int) = {
-          def bucketSql(j: Int): String =
-            s"(((h % 1073741824) * ${2 * j + 1} + ${7919 * j + 12345}) " +
-            s"% 2147483647) % $w"
           val rowEsts = (0 until 4).map { j =>
             s"""(SELECT CAST(COALESCE(SUM(x.c * y.c), 0) AS BIGINT) FROM
-              |    (SELECT ${bucketSql(j)} AS b, SUM(c)::BIGINT AS c FROM ca GROUP BY 1) x
+              |    (SELECT ${cmsBucketSql("h", j, w)} AS b, SUM(c)::BIGINT AS c FROM ca GROUP BY 1) x
               |    JOIN
-              |    (SELECT ${bucketSql(j)} AS b, SUM(c)::BIGINT AS c FROM cb GROUP BY 1) y
+              |    (SELECT ${cmsBucketSql("h", j, w)} AS b, SUM(c)::BIGINT AS c FROM cb GROUP BY 1) y
               |    USING (b))""".stripMargin
           }.mkString(",\n|    ")
           s"""SELECT ${w}::BIGINT AS width,
@@ -2004,14 +2001,11 @@ object EventQueries {
             col("cms_estimate") >= col("exact_join_size"))
       },
       Some {
-        def bucketSql(j: Int): String =
-          s"(((h % 1073741824) * ${2 * j + 1} + ${7919 * j + 12345}) " +
-          s"% 2147483647) % 256"
         val rowEsts = (0 until 4).map { j =>
           s"""(SELECT CAST(COALESCE(SUM(x.c * y.c), 0) AS BIGINT) FROM
-            |  (SELECT ${bucketSql(j)} AS b, SUM(c)::BIGINT AS c FROM ca GROUP BY 1) x
+            |  (SELECT ${cmsBucketSql("h", j, 256)} AS b, SUM(c)::BIGINT AS c FROM ca GROUP BY 1) x
             |  JOIN
-            |  (SELECT ${bucketSql(j)} AS b, SUM(c)::BIGINT AS c FROM cb GROUP BY 1) y
+            |  (SELECT ${cmsBucketSql("h", j, 256)} AS b, SUM(c)::BIGINT AS c FROM cb GROUP BY 1) y
             |  USING (b))""".stripMargin
         }.mkString(",\n|  ")
         s"""WITH ca AS (

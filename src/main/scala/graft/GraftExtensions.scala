@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.expressions.{CharShingleDistinctCount, CollectSetCapped,
-  DotProduct, FrequentItems, KmvDistinct, MinHashSignature, SimHash16,
+  DotProduct, FrequentItems, KmvDistinct, SimHash16,
   WordShingleHashes, WordShingleMinHash}
 
 /** SparkSessionExtensions entry point registering the engine's native
@@ -37,17 +37,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case Seq(a, b) => DotProduct(a, b)
         case _ => throw new IllegalArgumentException(
           "dot_product(arrayCol, arrayCol)")
-      }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
-
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (children: Seq[Expression]) => children match {
-        // aggregate builders return the AggregateFunction; analysis
-        // wraps it in an AggregateExpression
-        case Seq(c, Literal(n: Int, _)) => MinHashSignature(c, n)
-        case _ => throw new IllegalArgumentException(
-          "minhash_signature(longCol, numPermsLiteral)")
       }): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder))
 
     ext.injectFunction((

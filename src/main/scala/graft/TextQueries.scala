@@ -1861,13 +1861,10 @@ object TextQueries {
           .orderBy(col("term"))
       },
       Some {
-        def bucketSql(hExpr: String, j: Int): String =
-          s"((($hExpr % 1073741824) * ${2 * j + 1} + ${7919 * j + 12345}) " +
-          s"% 2147483647) % $CmsWidth"
         val tokBuckets = (0 until CmsDepth)
-          .map(j => s"${bucketSql("h", j)} AS b$j").mkString(",\n|    ")
+          .map(j => s"${cmsBucketSql("h", j, CmsWidth)} AS b$j").mkString(",\n|    ")
         val probeBuckets = (0 until CmsDepth)
-          .map(j => s"${bucketSql("h", j)} AS p$j").mkString(",\n|    ")
+          .map(j => s"${cmsBucketSql("h", j, CmsWidth)} AS p$j").mkString(",\n|    ")
         val estTerms = (0 until CmsDepth).map(j =>
           s"(SELECT CAST(COALESCE(sum(c), 0) AS BIGINT) FROM bk WHERE bk.b$j = pb.p$j)")
           .mkString(",\n|    ")
@@ -4000,10 +3997,10 @@ object TextQueries {
        |  WHERE len(string_split(text, ' ')) > 0
        |    AND len(string_split(text, ' ')) <= $PackCapacity),
        |kc AS (SELECT id, tk, $PackCapacity // tk AS k,
-       |    ${md5LongSqlT(s"'2:' || id::VARCHAR")} % $PackShards AS shard
+       |    ${md5LongSql(s"'2:' || id::VARCHAR")} % $PackShards AS shard
        |  FROM t),
        |r AS (SELECT *, row_number() OVER (PARTITION BY k, shard
-       |    ORDER BY ${md5LongSqlT("id::VARCHAR")}, id) AS rn FROM kc),
+       |    ORDER BY ${md5LongSql("id::VARCHAR")}, id) AS rn FROM kc),
        |b AS (SELECT id, tk, k, shard, (rn - 1) // k AS bin FROM r)
        |SELECT k, count(*) AS n_docs,
        |  count(DISTINCT shard::VARCHAR || ':' || bin::VARCHAR) AS n_bins,
@@ -4012,14 +4009,10 @@ object TextQueries {
        |    (count(DISTINCT shard::VARCHAR || ':' || bin::VARCHAR)
        |     * $PackCapacity)::DOUBLE AS DECIMAL(18,8)), 6) AS DOUBLE)
        |    AS fill_frac,
-       |  sum(CAST(${md5LongSqlT(
+       |  sum(CAST(${md5LongSql(
            "id::VARCHAR || ':' || shard::VARCHAR || ':' || bin::VARCHAR")}
        |    AS DECIMAL(38,0)))::VARCHAR AS assign_sig
        |FROM b GROUP BY k ORDER BY k""".stripMargin
-
-  /** DuckDB mirror of GraftFunctions.md5Long over an expression. */
-  private def md5LongSqlT(x: String): String =
-    s"('0x' || substring(md5($x), 1, 15))::BIGINT"
 
   /** Oracle for sample_stratified_neyman: the same decimal moments,
     * σ/share/largest-remainder algebra, and (md5Long(id), id) draw,

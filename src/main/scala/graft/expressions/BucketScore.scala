@@ -25,7 +25,7 @@ object BucketScoreKernel {
     while (i < words.length) {
       val w = words(i)
       if (w.nonEmpty)
-        acc += table((graft.streaming.MinHashLocal.hash60(w, xx) % b).toInt)
+        acc += table((graft.functions.GraftFunctions.hash60(w, xx) % b).toInt)
       i += 1
     }
     acc

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import graft.functions.GraftFunctions.cmsBucket
 
 /** Count–Min sketch (Cormode & Muthukrishnan 2005) as a Catalyst
   * aggregate — the point-frequency member of the engine's mergeable
@@ -23,9 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * OVER-estimate (collisions only add), within ε·N with probability
   * 1−δ for w = ⌈e/ε⌉, d = ⌈ln 1/δ⌉.
   *
-  * Row hashes reuse the engine's affine family (MinHash convention —
-  * Similarity.MersennePrime31 / Base30Mod): bucket_j(h) =
-  * ((h mod 2^30)·(2j+1) + 7919j + 12345 mod P) mod w. Pure integer
+  * Row j files an item under GraftFunctions.cmsBucket (the MinHash
+  * permutation family over the hash's low 30 bits, mod width), the one
+  * definition whose JVM, Column and SQL forms serve this aggregate,
+  * countMinEstimate, CmsStream and the oracles. Pure integer
   * arithmetic on the shared hash60, so a SQL oracle reproduces every
   * counter (and therefore every estimate) bit-identically: the bucket
   * value IS Σ counts of items landing there, which DuckDB computes
@@ -35,21 +37,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * probing is a plain element_at projection over the one-row result
   * (see SketchQueries' sketch_freq_cms).
   */
-object CountMinAgg {
-  private val P = 2147483647L  // Similarity.MersennePrime31
-  private val B = 1073741824L  // Similarity.Base30Mod
-
-  /** Row-j bucket of a 60-bit hash — the single definition shared by
-    * the batch aggregate, countMinEstimate's Column mirror, the SQL
-    * oracle generator, and the streaming form (CmsStream).
-    */
-  @inline def bucket(h: Long, j: Int, width: Int): Int = {
-    val base = java.lang.Math.floorMod(h, B)
-    (java.lang.Math.floorMod(base * (2L * j + 1) + (7919L * j + 12345L), P)
-      % width).toInt
-  }
-}
-
 case class CountMinAgg(
     child: Expression,
     depth: Int,
@@ -80,7 +67,7 @@ case class CountMinAgg(
       val h = v.asInstanceOf[Long]
       var j = 0
       while (j < depth) {
-        buf(j * width + CountMinAgg.bucket(h, j, width)) += 1L
+        buf(j * width + cmsBucket(h, j, width)) += 1L
         j += 1
       }
     }

@@ -1,19 +1,18 @@
 package graft.expressions
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.GraftFunctions.hash60
 
 /** Native 16-bit SimHash over whitespace tokens — one pass per row:
-  * md5 each token once, accumulate ±1 votes per bit, pack sign bits.
+  * hash each token once, accumulate ±1 votes per bit, pack sign bits.
   * Bit-identical to the composed form in ops.Similarity.simhash
-  * (same md5Long token hash = first 15 md5 hex digits base-16, same
-  * vote rule, same packing), which pays nested-lambda machinery and
-  * is excluded from codegen CSE.
+  * (same hash60 token hash — GraftFunctions' JVM twin — same vote
+  * rule, same packing), which pays nested-lambda machinery and is
+  * excluded from codegen CSE.
   */
 case class SimHash16(child: Expression, xx: Boolean = false)
     extends UnaryExpression {
@@ -41,25 +40,6 @@ object SimHashOps {
 
   val Bits = 16
 
-  // MessageDigest is not thread-safe but is reusable; getInstance per
-  // token would dominate the kernel
-  private val md5 = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
-  /** First 15 hex digits of md5, parsed base-16 — identical to
-    * GraftFunctions.md5Long (Spark's md5 hex is lowercase, as here).
-    */
-  def md5Long(s: String): Long = {
-    val digest = md5.get()
-    digest.reset()
-    val d = digest.digest(s.getBytes(StandardCharsets.UTF_8))
-    // 15 hex digits = first 7 bytes + high nibble of byte 8
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
-
   def simhash16(s: String, xx: Boolean = false): Long = {
     val votes = new Array[Int](Bits)
     var start = 0
@@ -67,9 +47,7 @@ object SimHashOps {
     var i = 0
     while (i <= len) {
       if (i == len || s.charAt(i) == ' ') {
-        val h =
-          if (xx) graft.streaming.MinHashLocal.xxHash60(s.substring(start, i))
-          else md5Long(s.substring(start, i))
+        val h = hash60(s.substring(start, i), xx)
         var b = 0
         while (b < Bits) {
           votes(b) += (((h >> b) & 1L) * 2 - 1).toInt

@@ -32,17 +32,19 @@ object ShingleKernels {
 }
 
 /** Whole MinHash signature of a text column in one per-row pass: word
-  * shingles → md5-based 30-bit base hash → numPerms affine minima,
-  * with no intermediate shingle strings materialized into the plan
-  * (no explode, no aggregation, no shuffle — the signature becomes a
-  * scan-time projection).
+  * shingles → 30-bit base hash → numPerms minima of the permutation
+  * family, with no intermediate shingle strings materialized into the
+  * plan (no explode, no aggregation, no shuffle — the signature
+  * becomes a scan-time projection).
   *
-  * Shares graft.streaming.MinHashLocal's math, which MinHashStreamSpec
-  * proves bit-identical to the expression pipeline
-  * (ops.Similarity.minhashSignatures) and therefore to the DuckDB
-  * oracles. Null when the document has fewer than shingleN words
-  * (mirrors the explode path, where such docs produce no signature
-  * row).
+  * Runs graft.streaming.MinHashLocal.signature, whose base hash and
+  * family are GraftFunctions.hash60 and GraftFunctions.perm — the
+  * module that also holds the Column forms the exploded pipeline
+  * (ops.Similarity.minhashSignaturesExploded) uses and the SQL forms
+  * the DuckDB oracles use; SimilaritySpec asserts the two pipelines
+  * agree bit for bit. Null when the document has fewer than shingleN
+  * words (mirrors the explode path, where such docs produce no
+  * signature row).
   *
   * doGenCode emits a direct static call into ShingleKernels, so the
   * surrounding projection stays in whole-stage codegen and the per-row

@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -127,17 +130,14 @@ object GraftFunctions {
 
   /** Point-frequency estimate from a [[countMin]] result array:
     * min over rows of the item's counter. `itemHash` must be the same
-    * 60-bit hash the sketch was built with (hash60 of the item). The
-    * bucket arithmetic mirrors CountMinAgg.bucket integer-for-integer
-    * (and is therefore also expressible in the SQL oracle).
+    * 60-bit hash the sketch was built with (hash60 of the item); each
+    * row's counter is found with [[cmsBucket]], as the aggregate files it.
     */
   def countMinEstimate(sketch: Column, itemHash: Column,
                        depth: Int, width: Int): Column =
     (0 until depth).map { j =>
-      val bkt = pmod(
-        pmod(itemHash, lit(1073741824L)) * lit(2L * j + 1) +
-          lit(7919L * j + 12345L), lit(2147483647L)) % lit(width.toLong)
-      element_at(sketch, (lit(j.toLong * width) + bkt + 1).cast("int"))
+      element_at(sketch,
+        (lit(j.toLong * width) + cmsBucket(itemHash, j, width) + 1).cast("int"))
     }.reduce(least(_, _))
 
   /** Deterministic mergeable KLL quantile sketch aggregate
@@ -287,10 +287,89 @@ object GraftFunctions {
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Seeded variant: an independent hash family member per salt
-    * (minhash "permutations", LSH hyperplanes).
+    * (LSH hyperplanes, seeded draws).
     */
   def md5Long(salt: Int, c: Column): Column =
     md5Long(concat(lit(salt.toString), lit(":"), c))
+
+  /** DuckDB mirror of [[md5Long]] over a SQL expression. */
+  def md5LongSql(x: String): String = s"('0x' || substring(md5($x), 1, 15))::BIGINT"
+
+  // MessageDigest is not thread-safe but is reusable; getInstance per
+  // call would dominate the per-row kernels
+  private val md5Local = ThreadLocal.withInitial[MessageDigest](() =>
+    MessageDigest.getInstance("MD5"))
+
+  /** JVM twin of [[md5Long]] for the per-row kernels and streams: the
+    * first 15 hex digits of md5 are the top 60 bits of its first 8 bytes.
+    */
+  def md5Long(s: String): Long = {
+    val md = md5Local.get()
+    md.reset()
+    val d = md.digest(s.getBytes(StandardCharsets.UTF_8))
+    var acc = 0L
+    var i = 0
+    while (i < 8) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
+    acc >>> 4
+  }
+
+  /** JVM twin of [[hash60]]'s xxhash64 branch: Spark's xxhash64 (seed
+    * 42) over the same UTF-8 bytes a string column holds, shifted to
+    * 60 bits.
+    */
+  def xxHash60(s: String): Long = {
+    val b = s.getBytes(StandardCharsets.UTF_8)
+    org.apache.spark.sql.catalyst.expressions.XXH64
+      .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
+        b.length, 42L) >>> 4
+  }
+
+  /** JVM twin of [[hash60]], with the mode passed in (executors do not
+    * read session state).
+    */
+  def hash60(s: String, xx: Boolean): Long =
+    if (xx) xxHash60(s) else md5Long(s)
+
+  /** The affine hash family under MinHash signatures, LSH bands and
+    * Count–Min rows: h_i(x) = ((2i+1)·x + 7919i + 12345) mod (2^31−1)
+    * over a 30-bit base hash x (a 60-bit hash mod 2^30). Every
+    * intermediate stays below 2^62, so the arithmetic is exact BIGINT
+    * in the JVM, Spark and DuckDB alike. Its JVM, Column and SQL forms
+    * all read [[permA]]/[[permB]], so the engines cannot drift.
+    *
+    * The multipliers are small and regular, not random: a base with a
+    * small value stays the minimum under many members at once, so the
+    * permutations are correlated and MinHash estimates carry more
+    * error than independent permutations would (ROADMAP D7).
+    */
+  val MersennePrime31 = 2147483647L // 2^31 - 1
+  val Base30Mod = 1073741824L       // 2^30
+
+  private def permA(i: Int): Long = 2L * i + 1
+  private def permB(i: Int): Long = 7919L * i + 12345L
+
+  /** Member i of the family over a base in [0, 2^30); in [0, 2^31−1). */
+  def perm(i: Int, base: Long): Long = (base * permA(i) + permB(i)) % MersennePrime31
+
+  def perm(i: Int, base: Column): Column =
+    pmod(base * lit(permA(i)) + lit(permB(i)), lit(MersennePrime31))
+
+  def permSql(i: Int, base: String): String =
+    s"(($base * ${permA(i)} + ${permB(i)}) % $MersennePrime31)"
+
+  /** Count–Min row j's bucket of a 60-bit hash h: member j over
+    * h mod 2^30, mod width. The JVM and Column forms fold any long,
+    * negatives included (floorMod / pmod); the SQL form's `%` expects a
+    * non-negative hash, as md5Long always is.
+    */
+  def cmsBucket(h: Long, j: Int, width: Int): Int =
+    (perm(j, java.lang.Math.floorMod(h, Base30Mod)) % width).toInt
+
+  def cmsBucket(h: Column, j: Int, width: Int): Column =
+    perm(j, pmod(h, lit(Base30Mod))) % lit(width.toLong)
+
+  def cmsBucketSql(h: String, j: Int, width: Int): String =
+    s"(${permSql(j, s"($h % $Base30Mod)")} % $width)"
 
   /** Session conf key selecting the 60-bit hash primitive under the
     * hash-based operators: "md5" (default — reproducible in DuckDB

@@ -36,17 +36,18 @@ private[graft] case class BucketNodeCluster(node: Long, cluster: Long)
   * formulation here stays in whole-stage codegen end-to-end, needs no
   * fitted model, and is verified bit-for-bit against DuckDB.
   *
-  * Hashing: one 60-bit md5 base hash per shingle, folded to 30 bits,
-  * then a universal-hash family h_i(x) = ((2i+1)·x + 7919i + 12345)
-  * mod (2^31-1) generates the "permutations" — the same construction
-  * datasketch uses (one strong base hash + affine family), chosen here
-  * because every step is exact 64-bit integer arithmetic reproducible
-  * in ANSI SQL (no float, no overflow: (2^31)·(2^30) < 2^62).
+  * Hashing: one 60-bit base hash per shingle (hash60), folded to 30
+  * bits, then the affine family h_i(x) = ((2i+1)·x + 7919i + 12345)
+  * mod (2^31-1) generates the "permutations" (GraftFunctions.perm,
+  * which also holds its JVM and SQL forms). Every step is exact 64-bit
+  * integer arithmetic reproducible in ANSI SQL (no float, no overflow:
+  * (2^31)·(2^30) < 2^62). This is not datasketch's construction:
+  * datasketch draws each member's multiplier and offset at random,
+  * while these are small and regular, so the permutations are
+  * correlated and estimates carry more error than Broder's analysis
+  * assumes (ROADMAP D7).
   */
 object Similarity {
-
-  val MersennePrime31 = 2147483647L // 2^31 - 1
-  val Base30Mod = 1073741824L       // 2^30
 
   /** Distinct word n-gram shingles of a text column (space-joined).
     * Documents with fewer than n words yield no shingles.
@@ -85,12 +86,6 @@ object Similarity {
     * xxhash64 under spark.graft.hashMode=xxhash64).
     */
   def base30(s: Column): Column = pmod(hash60(s), lit(Base30Mod))
-
-  /** i-th member of the affine universal hash family over a 30-bit
-    * base hash. All values < 2^31-1.
-    */
-  def minhashPerm(i: Int, base: Column): Column =
-    pmod(base * lit(2L * i + 1) + lit(7919L * i + 12345L), lit(MersennePrime31))
 
   /** MinHash signature as one column per permutation, computed by the
     * native one-pass expression (expressions.WordShingleMinHash): the
@@ -138,7 +133,7 @@ object Similarity {
     val exploded = df
       .select(col(idCol), explode(wordShingles(col(textCol), shingleN)).as("__sh"))
       .select(col(idCol), base30(col("__sh")).as("__b"))
-    val aggs = (0 until numPerms).map(i => min(minhashPerm(i, col("__b"))).as(s"m$i"))
+    val aggs = (0 until numPerms).map(i => min(perm(i, col("__b"))).as(s"m$i"))
     exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** JSONL sources and sinks (reference S1-S4, S7:
   * jsonl_load/io_jsonl_write, src/python/instructionspipe/utils.py:
@@ -25,7 +25,7 @@ object Jsonl {
     * inference is a full extra pass over the data.
     */
   def read(spark: SparkSession, path: String,
-           schema: org.apache.spark.sql.types.StructType): DataFrame =
+           schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
   /** S3 — JSONL sink; append or overwrite like io_jsonl_write's
@@ -45,10 +45,16 @@ object Jsonl {
   /** S7 — ChatML audit sink: traces JSONL plus a `.meta` sidecar
     * directory holding one row per session (session_id, stage, name),
     * mirroring inf.py:81-85's results/chatmls/meta triple.
+    *
+    * `traces` is evaluated once: the sidecar is read back from the
+    * written chatmls with the three columns' schema, because a trace
+    * frame calls the model inside an opaque mapPartitions and a second
+    * evaluation would call it again for every row.
     */
   def writeTraces(traces: DataFrame, dir: String): Unit = {
     traces.write.mode(SaveMode.Overwrite).json(s"$dir/chatmls")
-    traces.select(col("session_id"), col("stage"), col("name"))
+    val meta = StructType(Seq("session_id", "stage", "name").map(traces.schema(_)))
+    read(traces.sparkSession, s"$dir/chatmls", meta)
       .write.mode(SaveMode.Overwrite).json(s"$dir/meta")
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.expressions.CountMinAgg
+import graft.functions.GraftFunctions.cmsBucket
 
 /** Streaming Count–Min sketch — the stateful form of the batch
   * `count_min` aggregate (expressions/CountMinSketch.scala), closing
@@ -15,7 +15,7 @@ import graft.expressions.CountMinAgg
   * group's state is a full depth×width counter array updated per
   * micro-batch by flatMapGroupsWithState — O(groups · d · w) state
   * forever, independent of item cardinality. An item's buckets depend
-  * only on its hash (CountMinAgg.bucket — the single shared
+  * only on its hash (GraftFunctions.cmsBucket — the single shared
   * definition), so the element-wise SUM of the per-group sketches IS
   * the batch sketch over the same rows, bit for bit: merge-then-probe
   * equals the batch aggregate's answer exactly (asserted by
@@ -52,7 +52,7 @@ object CmsStream {
             n += 1
             var j = 0
             while (j < depth) {
-              arr(j * width + CountMinAgg.bucket(r.h, j, width)) += 1L
+              arr(j * width + cmsBucket(r.h, j, width)) += 1L
               j += 1
             }
           }
@@ -79,6 +79,6 @@ object CmsStream {
   /** Point estimate — identical arithmetic to countMinEstimate. */
   def estimate(counters: Array[Long], h: Long, depth: Int, width: Int): Long =
     (0 until depth)
-      .map(j => counters(j * width + CountMinAgg.bucket(h, j, width)))
+      .map(j => counters(j * width + cmsBucket(h, j, width)))
       .min
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.functions.GraftFunctions.{hash60, perm, Base30Mod}
 
 /** ST1 strict parity — true streaming MinHash-LSH dedup (reference
   * apps/etl/etl_slimpajama_dc_proc.py:119-166: the sequential corpus
@@ -102,47 +101,14 @@ object MinHashStream {
   }
 }
 
-/** Plain-JVM mirror of the ops.Similarity column math, for per-row
-  * evaluation inside streams (a row's signature depends only on its
-  * own text, so no aggregation is needed there). Bit-identical to the
-  * expression pipeline — SimilaritySpec asserts signature parity
-  * against minhashSignatures.
+/** Plain-JVM MinHash for per-row evaluation inside streams and the
+  * WordShingleMinHash kernel (a row's signature depends only on its
+  * own text, so no aggregation is needed there). The base hash and the
+  * permutation family come from GraftFunctions (hash60, perm), the
+  * module that also holds their Column and SQL forms; SimilaritySpec
+  * asserts signature parity against minhashSignaturesExploded.
   */
 object MinHashLocal {
-
-  val MersennePrime31: Long = 2147483647L // 2^31 - 1
-  val Base30Mod: Long = 1073741824L       // 2^30
-
-  private val md5Local = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
-  /** First 15 hex digits of md5, parsed base 16 — GraftFunctions.md5Long. */
-  def md5Long(s: String): Long = {
-    val md = md5Local.get()
-    md.reset()
-    val d = md.digest(s.getBytes(StandardCharsets.UTF_8))
-    // 15 hex digits = 7.5 bytes: take 8 bytes, drop the low nibble
-    var acc = 0L
-    var i = 0
-    while (i < 8) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
-    acc >>> 4
-  }
-
-  /** xxhash64(seed 42, Spark's xxhash64 function) folded to 60 bits —
-    * the JVM twin of GraftFunctions.hash60's xxhash64 branch
-    * (shiftrightunsigned(xxhash64(c), 4)). Hashes the same UTF-8
-    * bytes Spark's XxHash64 sees for a string column.
-    */
-  def xxHash60(s: String): Long = {
-    val b = s.getBytes(StandardCharsets.UTF_8)
-    org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-        b.length, 42L) >>> 4
-  }
-
-  /** Mode-selected 60-bit hash (GraftFunctions.hash60's JVM twin). */
-  def hash60(s: String, xx: Boolean): Long =
-    if (xx) xxHash60(s) else md5Long(s)
 
   /** Distinct word n-grams; split with limit -1 like Spark's split. */
   def wordShingles(text: String, n: Int): Seq[String] = {
@@ -151,7 +117,7 @@ object MinHashLocal {
     else (0 to w.length - n).map(i => w.slice(i, i + n).mkString(" ")).distinct
   }
 
-  /** md5Long of each distinct shingle (hash per distinct STRING — the
+  /** hash60 of each distinct shingle (hash per distinct STRING — the
     * array may contain equal longs if two shingles collide, exactly
     * like hashing the exploded distinct strings in SQL).
     */
@@ -179,7 +145,7 @@ object MinHashLocal {
         val base = hash60(s, xx) % Base30Mod
         var i = 0
         while (i < numPerms) {
-          val h = (base * (2L * i + 1) + (7919L * i + 12345L)) % MersennePrime31
+          val h = perm(i, base)
           if (h < sig(i)) sig(i) = h
           i += 1
         }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.GraftFunctions
+
 /** Streaming sequence packer — the online twin of
   * [[graft.ops.Text.packHarmonic]]: documents arrive on a stream and
   * are placed into fixed-capacity context windows by the same
@@ -40,7 +42,7 @@ object PackStream {
         val k = capacity / d.n_tokens
         // same seeded 60-bit hash as the batch op's shard key
         val shard = math.floorMod(
-          MinHashLocal.md5Long(s"2:${d.doc_id}"), shards.toLong)
+          GraftFunctions.md5Long(s"2:${d.doc_id}"), shards.toLong)
         (k, shard, d.doc_id)
       }
       .groupByKey { case (k, shard, _) => (k, shard) }
@@ -50,7 +52,7 @@ object PackStream {
           var seen = state.getOption.map(_.seen).getOrElse(0L)
           val out = it.toSeq
             .sortBy { case (_, _, id) =>
-              (MinHashLocal.md5Long(id.toString), id) }
+              (GraftFunctions.md5Long(id.toString), id) }
             .map { case (_, _, id) =>
               seen += 1
               Placement(id, k, shard, (seen - 1) / k)

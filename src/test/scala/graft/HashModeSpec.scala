@@ -11,7 +11,7 @@ import graft.ops.{Similarity, Text}
   *  (1) the native one-pass kernels agree bit-for-bit with the
   *      composed Column formulations under BOTH modes (the same
   *      independent-recomputation argument the md5 oracles make);
-  *  (2) the JVM twin (MinHashLocal.hash60) agrees with Spark's
+  *  (2) the JVM twin (GraftFunctions.hash60) agrees with Spark's
   *      xxhash64 expression on the same strings;
   *  (3) flipping the mode changes only hash leaf expressions — the
   *      physical plan shape (operator sequence, exchange count) is
@@ -36,7 +36,7 @@ class HashModeSpec extends SparkSpec {
     val texts = Seq("", "a", "hello world", "naïve — ünïcode ⚡")
     val viaSpark = texts.toDF("t")
       .select(shiftrightunsigned(xxhash64(col("t")), 4)).as[Long].collect()
-    val viaJvm = texts.map(graft.streaming.MinHashLocal.xxHash60)
+    val viaJvm = texts.map(GraftFunctions.xxHash60)
     assert(viaSpark.toSeq == viaJvm)
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.ops.Text
-import graft.streaming.{MinHashLocal, PackStream}
+import graft.functions.GraftFunctions
+import graft.streaming.PackStream
 import graft.streaming.PackStream.DocIn
 
 /** Streaming packer: bit-exact parity with the batch harmonic layout
@@ -37,7 +38,7 @@ class PackStreamSpec extends SparkSpec {
 
   test("hash-rank arrival order reproduces the batch layout bit-for-bit") {
     val docs = lens.map { case (id, n) => DocIn(id, n) }
-      .sortBy(d => (MinHashLocal.md5Long(d.doc_id.toString), d.doc_id))
+      .sortBy(d => (GraftFunctions.md5Long(d.doc_id.toString), d.doc_id))
     val (a, b) = docs.splitAt(docs.size / 2)
     val streamed = run(Seq(a, b))
 
@@ -53,7 +54,7 @@ class PackStreamSpec extends SparkSpec {
     val streamSig = streamed.toSeq
       .groupBy(_._2._1)
       .view.mapValues(_.map { case (id, (_, sh, bin)) =>
-        BigInt(MinHashLocal.md5Long(s"$id:$sh:$bin"))
+        BigInt(GraftFunctions.md5Long(s"$id:$sh:$bin"))
       }.sum.toString).toMap
     assert(streamSig == batchSig,
       s"stream layout != batch layout: $streamSig vs $batchSig")

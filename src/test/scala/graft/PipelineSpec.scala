@@ -172,6 +172,26 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("traceStage + writeTraces call the model once per row and instruction") {
+    val n = 6
+    val k = 2
+    val twoIns = InstructionStage("map", Seq(ins, ins.copy(name = "summ2", task = "T2.")))
+    val st0 = InstructionRunner.stringifyKv(
+      (1 to n).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text"),
+      Seq("doc_id", "text"), "s0")
+    val dir = java.nio.file.Files.createTempDirectory("graft-traces").toString
+    LlmCache.clear()
+    CountingClient.firstAttempts.set(0)
+    try {
+      graft.sources.Jsonl.writeTraces(
+        InstructionRunner.traceStage(st0, twoIns, CountingClient(), "s0", "doc_id"), dir)
+    } finally LlmCache.clear()
+    assert(CountingClient.firstAttempts.get == n * k)
+    val meta = graft.sources.Jsonl.read(spark, s"$dir/meta")
+    assert(meta.count() == n * k)
+    assert(meta.columns.toSet == Set("session_id", "stage", "name"))
+  }
+
   test("markdownExpr skips missing entries") {
     val d = Seq(Map("a" -> "1")).toDF("m")
     val md = d.select(InstructionRunner.markdownExpr(Seq("a", "b"), col("m")))
@@ -211,4 +231,22 @@ object SlowClient {
     assert(inFlight.get == 0, "model calls still in flight")
     peak.set(0)
   }
+}
+
+/** A model that counts its first-attempt calls. Its cache identity is
+  * new on every call, so LlmCache never answers for it and every
+  * evaluation of a frame reaches the model.
+  */
+final case class CountingClient() extends LlmClient {
+  override def cacheId: String = s"counting:${CountingClient.ids.incrementAndGet()}"
+
+  override def complete(msgs: Seq[ChatMessage], attempt: Int): LlmResponse = {
+    if (attempt == 0) CountingClient.firstAttempts.incrementAndGet()
+    LlmResponse("ok", "stop")
+  }
+}
+
+object CountingClient {
+  val ids = new java.util.concurrent.atomic.AtomicLong
+  val firstAttempts = new AtomicInteger
 }

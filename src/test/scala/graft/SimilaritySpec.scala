@@ -212,25 +212,6 @@ class SimilaritySpec extends SparkSpec with IterationContract {
     assert(ham(sh(0L), sh(2L)) > 4)
   }
 
-  test("MinHashSignature aggregate matches the min-column formulation") {
-    import org.apache.spark.sql.GraftColumnBridge
-    val numPerms = 16
-    val exploded = docs
-      .select(col("doc_id"),
-        explode(Similarity.wordShingles(col("text"), 5)).as("sh"))
-      .select(col("doc_id"), Similarity.base30(col("sh")).as("b"))
-    val agg = GraftColumnBridge.column(
-      graft.expressions.MinHashSignature(
-        GraftColumnBridge.expression(col("b")), numPerms).toAggregateExpression())
-    val viaAgg = exploded.groupBy("doc_id").agg(agg.as("sig"))
-      .select(col("doc_id") +: (0 until numPerms)
-        .map(i => element_at(col("sig"), i + 1)): _*)
-      .collect().map(r => r.getLong(0) -> (1 to numPerms).map(r.getLong)).toMap
-    val viaCols = Similarity.minhashSignatures(docs, "doc_id", "text", numPerms, 5)
-      .collect().map(r => r.getLong(0) -> (1 to numPerms).map(r.getLong)).toMap
-    assert(viaAgg == viaCols)
-  }
-
   test("native simhash16 matches the composed-expression form") {
     val d = Tables.load(spark, sfDir, "documents").limit(100)
     val native = d.select(graft.functions.GraftFunctions.simhash16(col("text")))

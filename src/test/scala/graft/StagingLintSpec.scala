@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StagingLintSpec extends AnyFunSuite {
 
-  private val Root = Paths.get("src/main/scala")
+  import StagingLintSpec._
+
   private val StageFile = Root.resolve("graft/ops/Stage.scala")
 
   private val Banned = Seq(
@@ -22,48 +23,6 @@ class StagingLintSpec extends AnyFunSuite {
     "checkpoint" -> raw"\.checkpoint\(".r,
     "StorageLevel" -> raw"\bStorageLevel\b".r,
     "createDataFrame over .rdd" -> raw"createDataFrame\(\s*[\w.]*\.rdd\b".r)
-
-  /** `src` with `//` and (nested) block comments blanked out; string
-    * and character literals are kept, so a "//" inside one survives.
-    */
-  def stripComments(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var depth = 0
-    def at(s: String) = src.startsWith(s, i)
-    while (i < src.length) {
-      if (depth > 0) {
-        if (at("/*")) { depth += 1; i += 2 }
-        else if (at("*/")) { depth -= 1; i += 2 }
-        else { if (src(i) == '\n') out += '\n'; i += 1 }
-      } else if (at("/*")) { depth = 1; i += 2 }
-      else if (at("//")) { while (i < src.length && src(i) != '\n') i += 1 }
-      else if (at("\"\"\"")) {
-        val end = src.indexOf("\"\"\"", i + 3)
-        val stop = if (end < 0) src.length else end + 3
-        out ++= src.substring(i, stop); i = stop
-      } else if (src(i) == '"' || (src(i) == '\'' && i + 2 < src.length &&
-          (src(i + 2) == '\'' || src(i + 1) == '\\'))) {
-        val q = src(i)
-        out += q; i += 1
-        while (i < src.length && src(i) != q && src(i) != '\n') {
-          if (src(i) == '\\' && i + 1 < src.length) { out += src(i); i += 1 }
-          out += src(i); i += 1
-        }
-        if (i < src.length) { out += src(i); i += 1 }
-      } else { out += src(i); i += 1 }
-    }
-    out.toString
-  }
-
-  private def mainSources: Seq[Path] = {
-    val walk = Files.walk(Root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
-
-  private def code(p: Path): String =
-    stripComments(new String(Files.readAllBytes(p), "UTF-8"))
 
   test("stripComments drops comments and keeps literals") {
     val src = "a /* x /* nested */ y */ b // c.persist(\n" +
@@ -105,4 +64,54 @@ class StagingLintSpec extends AnyFunSuite {
       "SPARK_GRAFT_HASH_MODE", "SPARK_GRAFT_VERIFY_ONLY", "FUZZ_NULLS"),
       keys.flatten.distinct.sorted.mkString(", "))
   }
+}
+
+/** The comment-stripped scan of the main sources, shared by the lint
+  * suites.
+  */
+object StagingLintSpec {
+
+  val Root: Path = Paths.get("src/main/scala")
+
+  /** `src` with `//` and (nested) block comments blanked out; string
+    * and character literals are kept, so a "//" inside one survives.
+    */
+  def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    var depth = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < src.length) {
+      if (depth > 0) {
+        if (at("/*")) { depth += 1; i += 2 }
+        else if (at("*/")) { depth -= 1; i += 2 }
+        else { if (src(i) == '\n') out += '\n'; i += 1 }
+      } else if (at("/*")) { depth = 1; i += 2 }
+      else if (at("//")) { while (i < src.length && src(i) != '\n') i += 1 }
+      else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) src.length else end + 3
+        out ++= src.substring(i, stop); i = stop
+      } else if (src(i) == '"' || (src(i) == '\'' && i + 2 < src.length &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\'))) {
+        val q = src(i)
+        out += q; i += 1
+        while (i < src.length && src(i) != q && src(i) != '\n') {
+          if (src(i) == '\\' && i + 1 < src.length) { out += src(i); i += 1 }
+          out += src(i); i += 1
+        }
+        if (i < src.length) { out += src(i); i += 1 }
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  def mainSources: Seq[Path] = {
+    val walk = Files.walk(Root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  def code(p: Path): String =
+    stripComments(new String(Files.readAllBytes(p), "UTF-8"))
 }

@@ -135,22 +135,6 @@ class TextJsonlSpec extends SparkSpec {
     viaSql.foreach { case (id, v) => assert(v == viaScala(id), s"doc $id") }
   }
 
-  test("minhash_signature SQL registration matches the min-column formulation") {
-    val d = Tables.load(spark, sfDir, "documents").limit(20)
-    d.createOrReplaceTempView("mh_docs")
-    val viaSql = spark.sql(
-      """SELECT doc_id, minhash_signature(
-        |  pmod(cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint), 1073741824), 8) AS sig
-        |FROM (SELECT doc_id, explode(split(text, ' ')) AS s FROM mh_docs)
-        |GROUP BY doc_id""".stripMargin)
-      .as[(Long, Seq[Long])].collect().toMap
-    val viaCols = graft.ops.Similarity
-      .minhashSignatures(d, "doc_id", "text", 8, 1)
-      .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
-    assert(viaSql.keySet == viaCols.keySet)
-    viaCols.foreach { case (id, sig) => assert(viaSql(id) == sig, s"doc $id") }
-  }
-
   test("csv source reads headers; plugin loader instantiates by class name") {
     val dir = Files.createTempDirectory("graft-csv").toString
     Files.writeString(java.nio.file.Path.of(s"$dir/d.csv"), "id,v\n1,a\n2,b\n")
